@@ -29,8 +29,24 @@ object GraftSession {
     *    inside a reader function (readers must not mutate session
     *    conf). `Tables.load` adapts whichever physical type the scan
     *    yields (TablesSchemaSpec pins all vintages).
+    *  - small sorts in one partition: the AQE runtime rule
+    *    [[graft.plans.SmallSortOnePartition]] turns a global sort whose
+    *    input — measured from materialized query stages, with no
+    *    `Generate` between them and the sort — is at most
+    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` into a
+    *    single-partition sort, dropping the range partitioner's
+    *    sampling job (which re-ran the sort's input). It does nothing
+    *    before a stage has run, after an explode, over a join of two
+    *    big stages, or above one advisory partition; it adds no
+    *    setting of its own.
+    *
+    * Its companion at the kernel entries (no session setting either)
+    * is [[graft.sources.LayoutOps.spread]]: it round-robins a map-only
+    * input that yields fewer partitions than `defaultParallelism`, and
+    * leaves anything at least that wide alone.
     */
   def tuned(b: SparkSession.Builder, parallelism: Int): SparkSession.Builder = b
+    .withExtensions(_.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortOnePartition))
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     .config("spark.sql.adaptive.skewJoin.enabled", "true")

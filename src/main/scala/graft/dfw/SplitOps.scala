@@ -194,12 +194,16 @@ object SplitOps {
     * the documented escape hatch, because no driver-side rule can see
     * through stats that are wrong by construction without
     * materializing the input first.
+    *
+    * The floor is never below 2: the two-phase scalable operators
+    * require more than one range partition, which a floor of `cores`
+    * alone would not give a local[1] session.
     */
   def adaptiveRangeParts(df: DataFrame): Int = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val target = bytes / (2L * 1024 * 1024)
-    target.max(BigInt(parallelism)).min(BigInt(parallelism) * 32).toInt
+    target.max(BigInt(parallelism)).min(BigInt(parallelism) * 32).max(2).toInt
   }
 
   /** `numParts <= 0` → [[adaptiveRangeParts]]; explicit stays. */

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.LayoutOps
+
 /** Multimodal column plumbing (SURVEY.md §2.8 X5).
   *
   * Media are opaque `BINARY` columns plus typed metadata. CONTAINER
@@ -406,9 +408,8 @@ object MultimodalOps {
   def documentsAsImages(docs: DataFrame, idCol: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long]
+    LayoutOps.spread(docs.select(col(idCol).cast("long"))).as[Long]
       // 8-byte input rows, per-row work is the PNG encode — spread it
-      .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions(_.map(id => (id, synthImagePng(id))))
       .toDF("doc_id", "blob")
   }
@@ -551,11 +552,10 @@ object MultimodalOps {
   def documentsAsVideo(docs: DataFrame, idCol: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long]
+    LayoutOps.spread(docs.select(col(idCol).cast("long"))).as[Long]
       // same fan-out rationale as documentsAsAudio: the input rows are
       // 8 bytes, the per-row work is the container build — round-robin
       // the ids so the writer work spreads across cores
-      .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
         val nV = 24 + (id % 48).toInt
         val video = VideoCodec.TrackSpec(
@@ -635,10 +635,9 @@ object MultimodalOps {
     val fourcc = if (format == "jpg") "jpeg" else "png "
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long]
+    LayoutOps.spread(docs.select(col(idCol).cast("long"))).as[Long]
       // same fan-out rationale as documentsAsVideo: 8-byte input rows,
       // per-row work is nFrames real image encodes
-      .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
         val w = 32 + (id % 4).toInt * 16
         val h = 24 + (id % 3).toInt * 8
@@ -806,7 +805,7 @@ object MultimodalOps {
   def documentsAsAudio(docs: DataFrame, idCol: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col(idCol).cast("long")).as[Long]
+    LayoutOps.spread(docs.select(col(idCol).cast("long"))).as[Long]
       // The downstream codec passes are CPU-bound at ~0.2 ms/clip while
       // the row here is 8 bytes: a corpus-sized parquet scan often
       // lands in ONE input split (files.maxPartitionBytes is sized for
@@ -814,7 +813,6 @@ object MultimodalOps {
       // Round-robin the ids across the cluster first — the shuffle
       // moves ids only, the codec work fans out per-core (measured
       // 12.0 → ~1 s on 50k clips at sf1).
-      .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions(_.map { id =>
         val n = 200 + (id % 100).toInt
         val samples = Array.tabulate(n) { i =>

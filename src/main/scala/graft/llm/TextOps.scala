@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.sources.LayoutOps
+
 /** Text analysis operators (SURVEY.md §2.8 X4): token statistics,
   * marker-based language scoring, quality ratios, and document
   * fingerprinting. All pure scalar-function pipelines — they stay
@@ -820,9 +822,11 @@ object TextOps {
     * tokenization step of a training-data pipeline. Text is
     * lowercased, split on spaces; characters outside the vocabulary
     * become single-character unknown tokens (counted in `n_unk`).
-    * Map-only and codegen'd — the vocabulary rides the plan, the scan
-    * never shuffles; per-doc output is the token count, unknown count,
-    * and the full '|'-joined token stream (value-exact cross-engine).
+    * Map-only and codegen'd — the vocabulary rides the plan; the only
+    * shuffle is [[graft.sources.LayoutOps.spread]] widening an input
+    * with fewer partitions than cores. Per-doc output is the token
+    * count, unknown count, and the full '|'-joined token stream
+    * (value-exact cross-engine).
     */
   def bpeEncode(docs: DataFrame, idCol: String, textCol: String,
                 vocab: Seq[String] = DemoBpeVocab): DataFrame = {
@@ -832,7 +836,7 @@ object TextOps {
     // doubled encode cost (guide §4)
     val enc = graft.functions.TokenizeFunctions.greedyMatchEncode(
       lower(col(textCol)), vocab)
-    docs.select(col(idCol).as("doc_id"), enc.as("__enc"))
+    LayoutOps.spread(docs).select(col(idCol).as("doc_id"), enc.as("__enc"))
       .select(
         col("doc_id"),
         size(col("__enc").getField("toks")).cast("long").as("n_tokens"),

@@ -3,8 +3,12 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.{LongDot, PqAdcDot, QuantizeVec, QuantizedDot}
 
@@ -23,6 +27,52 @@ object FuseQuantizedDot extends Rule[LogicalPlan] {
       case LongDot(QuantizeVec(x, s1), QuantizeVec(y, s2)) if s1 == s2 =>
         QuantizedDot(x, y, s1)
     }
+}
+
+/** AQE runtime rule: a global sort whose input measures at most one
+  * advisory partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+  * sorts in ONE partition instead of range-partitioning. A range
+  * exchange runs its input twice — once in the partitioner's sampling
+  * job, once in the map stage — so a per-row kernel between the last
+  * shuffle and a final `orderBy` paid for itself twice, for a result
+  * that fits one task anyway. The rewrite puts a single-partition
+  * exchange under the sort: the input runs once, across the upstream
+  * stage's partitions, and one task sorts ≤ one advisory partition.
+  *
+  * Fires only on evidence: every leaf under the sort must be a
+  * MATERIALIZED query stage, and no `Generate` may sit between them
+  * and the sort (an explode's output is not bounded by its input).
+  * The input's size is Spark's estimate over those stages' runtime
+  * sizes, or — where that estimate multiplies a join's sides — the
+  * stages' measured row counts bounded through the plan (`maxRows`)
+  * times the row width, whichever is smaller. A sort over a raw scan,
+  * over an equi-join of two big stages, or over more than one advisory
+  * partition keeps its range exchange.
+  */
+object SmallSortOnePartition extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case s: Sort if s.global && !partitionedFor(s) && small(s.child) =>
+      s.copy(child = Repartition(1, shuffle = true, s.child))
+  }
+
+  // the sort's own exchange is already planned (this rule's rewrite)
+  // or has run (its range or single-partition stage)
+  private def partitionedFor(s: Sort): Boolean = (s.child match {
+    case r: Repartition => Some(r.partitioning)
+    case q: LogicalQueryStage => Some(q.physicalPlan.outputPartitioning)
+    case _ => None
+  }).exists(_.satisfies(OrderedDistribution(s.order)))
+
+  private def small(input: LogicalPlan): Boolean =
+    input.collectLeaves().forall {
+      case q: LogicalQueryStage => q.isMaterialized
+      case _ => false
+    } &&
+      !input.exists(_.isInstanceOf[Generate]) && {
+        val byRows = input.maxRows.map(n => BigInt(n) * EstimationUtils.getSizePerRow(input.output))
+        (input.stats.sizeInBytes +: byRows.toSeq).min <=
+          conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      }
 }
 
 /** Session extension entry point:
@@ -74,6 +124,7 @@ object GraftExtensions {
 
   def install(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => FuseQuantizedDot)
+    ext.injectRuntimeOptimizerRule(_ => SmallSortOnePartition)
     functions.foreach(ext.injectFunction)
   }
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.functions.ZOrderFunctions
@@ -17,6 +19,32 @@ import graft.functions.ZOrderFunctions
   * the key itself against the DuckDB replay.
   */
 object LayoutOps {
+
+  /** Round-robin `df` to `defaultParallelism` partitions when its
+    * input yields fewer — the entry of a CPU-heavy per-row kernel
+    * behind a scan that lands in fewer splits than there are cores
+    * (one parquet row group is one task however costly its rows are;
+    * `files.maxPartitionBytes` sizes splits for bytes, not work).
+    *
+    * Decided at plan time without a job: only a map-only plan (no
+    * exchange, no subquery) has a partition count before it runs, and
+    * building its RDD runs nothing. Anything else — a shuffle whose
+    * count AQE settles at run time, or an input already at least as
+    * wide as the cores — is returned unchanged, so at local[1] this is
+    * the identity. A streaming input is returned unchanged too: its
+    * splits are decided per micro-batch.
+    */
+  def spread(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    lazy val plan = df.queryExecution.executedPlan
+    def mapOnly = !plan.exists {
+      case _: AdaptiveSparkPlanExec | _: Exchange => true
+      case p => p.subqueries.nonEmpty
+    }
+    if (cores > 1 && !df.isStreaming && mapOnly && plan.execute().getNumPartitions < cores)
+      df.repartition(cores)
+    else df
+  }
 
   /** Z-order clustered write: range-partition AND sort by the
     * interleaved key. `repartitionByRange` samples the key

@@ -1,13 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.VectorFunctions
 import graft.plans.GraftExtensions
 
 /** The injected optimizer rule must fuse nested quantize+dot into the
-  * single-pass expression without changing results.
+  * single-pass expression without changing results; the AQE runtime
+  * rule `SmallSortOnePartition` (installed by `GraftSession.tuned`, so
+  * the suite session has it) must sort small inputs in one partition
+  * and leave everything else range-partitioned.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -71,5 +78,70 @@ class GraftExtensionsSpec extends SparkSpec {
     // pattern — correctness must hold either way.
     val out = df.select(VectorFunctions.longDot(col("qa"), col("qb")).as("d"))
     out.as[Long].head() shouldBe (1000L * 3000L + 2000L * 4000L)
+  }
+
+  // ---- SmallSortOnePartition ----
+
+  /** A documents table as the testdata ships it: one parquet file, one
+    * row group, so its scan is a single task. */
+  private lazy val docsDir: String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("small-sort").toString
+    (1 to 400).map(i => (i.toLong, s"the quick brown fox $i jumps over the lazy dog ${i % 7}",
+        "en", "web", 50L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def bpeEncode: DataFrame = SparkEntry.queries("x4_bpe_encode")(spark, docsDir)
+
+  /** Runs `df` and returns its rows and its final (post-execution) AQE plan. */
+  private def runFinal(df: DataFrame): (Seq[String], String) = {
+    val rows = df.collect().map(_.toString).toSeq
+    val plan = df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec]
+    plan.isFinalPlan shouldBe true
+    (rows, plan.executedPlan.treeString)
+  }
+
+  private def withAdvisory[T](bytes: String)(body: => T): T = {
+    val key = SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("small sort: x4_bpe_encode sorts in one partition, no range partitioning") {
+    val (_, plan) = runFinal(bpeEncode)
+    plan should include("Exchange SinglePartition")
+    plan.toLowerCase should not include "rangepartitioning"
+  }
+
+  test("small sort: input above the advisory partition size keeps range partitioning") {
+    val (_, plan) = withAdvisory("64")(runFinal(bpeEncode))
+    plan should include("rangepartitioning")
+    plan should not include "Exchange SinglePartition"
+  }
+
+  test("small sort: a Generate between the last stage and the sort keeps range partitioning") {
+    val df = spark.range(0, 200, 1, 1).repartition(4)
+      .select(col("id"), explode(sequence(lit(1), lit(3))).as("k"))
+      .orderBy(col("id"), col("k"))
+    val (rows, plan) = runFinal(df)
+    plan should include("rangepartitioning")
+    rows should have size 600
+  }
+
+  test("small sort: results are identical with and without the rewrite") {
+    def aggSorted = spark.range(0, 5000, 1, 4)
+      .groupBy((col("id") % 11).as("g")).agg(sum(col("id")).as("s"))
+      .orderBy(col("g"))
+    for (df <- Seq(() => bpeEncode, () => aggSorted)) {
+      val (rewritten, p1) = runFinal(df())
+      val (ranged, p2) = withAdvisory("64")(runFinal(df()))
+      p1 should include("Exchange SinglePartition")
+      p2 should include("rangepartitioning")
+      rewritten shouldBe ranged
+    }
   }
 }

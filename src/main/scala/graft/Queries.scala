@@ -601,10 +601,17 @@ object Queries {
       |ORDER BY query_id, rnk""".stripMargin
 
   /** One bpeTrain merge round replayed in DuckDB SQL: pair counts from
-    * `w{r-1}`, single-row argmax `b{r}`, and the left-to-right
-    * non-overlapping merge via the run-parity formulation (candidates
-    * can only be adjacent when left = right; odd-ranked candidates in
-    * each maximal run are exactly the greedy picks).
+    * `w{r-1}`, single-row argmax `b{r}`, and the rewrite of every word.
+    *
+    * SQL has no sequential per-word scan, so the left-to-right
+    * non-overlapping merge is done by position arithmetic instead: a
+    * candidate position is one where (sym[i], sym[i+1]) = (x, y). Two
+    * candidates can only be adjacent when x = y (runs like "a a a a"),
+    * so taking the odd-ranked candidates inside each maximal run of
+    * consecutive candidates is EXACTLY the left-to-right greedy, and
+    * windows over the word table express it. The replay is an
+    * independent formulation of the same rewrite the trainer does with
+    * a scan.
     */
   private def bpeTrainRoundSql(r: Int): String = {
     val prev = s"w${r - 1}"
@@ -4011,8 +4018,8 @@ object Queries {
     // the corpus (Sennrich et al. 2016). The oracle replays all 4
     // rounds in SQL: word-frequency reduction, pair counts, the
     // argmax, and the left-to-right non-overlapping merge via the
-    // run-parity formulation (see TextOps.bpeTrain scaladoc) — the
-    // whole trainer is hash-checked, not just its output shape. ----
+    // run-parity formulation (see bpeTrainRoundSql) — the whole
+    // trainer is hash-checked, not just its output shape. ----
     ("x4_bpe_train",
       (s: SparkSession, dir: String) => {
         TextOps.bpeTrain(Tables.load(s, dir, "documents"), "doc_id", "text", nMerges = 4)
@@ -4031,15 +4038,12 @@ object Queries {
            |ORDER BY round""".stripMargin
       }),
 
-    // ---- X4: BPE training, sampled/bounded path (VERDICT r6 item 4)
-    // — the same trainer with the merge loop running driver-side on
-    // the collected top-maxWords word-frequency table (zero Spark jobs
-    // per round; the distributed loop schedules 2 per merge). At full
-    // coverage it is value-identical to bpeTrain, so the SAME 4-round
-    // SQL replay hash-checks it. ----
+    // ---- X4: BPE training with the word cap spelled out — bpeTrain
+    // at maxWords = Int.MaxValue (full coverage) is the same call as
+    // x4_bpe_train, so the SAME 4-round SQL replay hash-checks it. ----
     ("x4_bpe_train_sampled",
       (s: SparkSession, dir: String) => {
-        TextOps.bpeTrainSampled(Tables.load(s, dir, "documents"), "doc_id", "text",
+        TextOps.bpeTrain(Tables.load(s, dir, "documents"), "doc_id", "text",
             nMerges = 4, maxWords = Int.MaxValue)
           .orderBy(col("round"))
       },
@@ -4068,8 +4072,10 @@ object Queries {
       (s: SparkSession, dir: String) => {
         val lowered = Tables.load(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("text"))
+        // sorted on the driver: a Spark sort of the few merge rows
+        // runs 3 jobs (sample, map, result)
         val merges = TextOps.bpeTrain(lowered, "doc_id", "text", nMerges = 4)
-          .orderBy("round").collect()
+          .collect().sortBy(_.getLong(0))
         val vocab = "abcdefghijklmnopqrstuvwxyz0123456789".map(_.toString) ++
           merges.map(r => r.getString(1) + r.getString(2)).toSeq
         TextOps.bpeEncode(lowered, "doc_id", "text", vocab).orderBy(col("doc_id"))
@@ -4109,20 +4115,19 @@ object Queries {
            |FROM bagg JOIN bstr USING (doc_id) ORDER BY doc_id""".stripMargin
       }),
 
-    // ---- X4: SAMPLED-trainer train→apply pipeline at 2× the merge
-    // depth — the production trainer (bpeTrainSampled, zero Spark jobs
-    // per round) feeding the encoder, oracle-checked end-to-end: the
-    // vocabulary is DERIVED from an 8-round SQL replay, a depth the
-    // per-round distributed trainer's oracle would pay double for.
-    // Exercises merge products of merge products (round-8 pieces span
-    // 3+ characters), which the 4-round pipeline never reaches. ----
+    // ---- X4: train→apply pipeline at 2× the merge depth — bpeTrain
+    // with the word cap spelled out (full coverage) feeding the
+    // encoder, oracle-checked end-to-end: the vocabulary is DERIVED
+    // from an 8-round SQL replay. Exercises merge products of merge
+    // products (round-8 pieces span 3+ characters), which the 4-round
+    // pipeline never reaches. ----
     ("x4_bpe_pipeline_sampled",
       (s: SparkSession, dir: String) => {
         val lowered = Tables.load(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("text"))
-        val merges = TextOps.bpeTrainSampled(lowered, "doc_id", "text",
+        val merges = TextOps.bpeTrain(lowered, "doc_id", "text",
             nMerges = 8, maxWords = Int.MaxValue)
-          .orderBy("round").collect()
+          .collect().sortBy(_.getLong(0))
         val vocab = "abcdefghijklmnopqrstuvwxyz0123456789".map(_.toString) ++
           merges.map(r => r.getString(1) + r.getString(2)).toSeq
         TextOps.bpeEncode(lowered, "doc_id", "text", vocab).orderBy(col("doc_id"))

@@ -585,150 +585,52 @@ object TextOps {
 
   /** X4: BPE vocabulary TRAINING (Sennrich et al. 2016, "Neural
     * Machine Translation of Rare Words with Subword Units") — learn
-    * the first `nMerges` byte-pair merges from a corpus. The classic
-    * tokenizer-training reduction: ONE linear corpus scan collapses to
-    * a word-frequency table (|distinct words| rows), and every merge
-    * round then runs on that small table — pair counts are a hash
-    * aggregation weighted by word frequency, the winning pair is a
-    * single-row argmax (count desc, pair lexicographic — the one
-    * inherently driver-visible value per round, as in any BPE
-    * trainer), and the merge rewrite applies left-to-right
-    * non-overlapping within each word.
+    * the first `nMerges` byte-pair merges from a corpus.
     *
-    * The non-overlap rule is implemented by position arithmetic, not a
-    * sequential fold: a merge candidate position is one where
-    * (sym[i], sym[i+1]) = (x, y); two candidates can only be adjacent
-    * when x = y (runs like "a a a a"), so taking the odd-ranked
-    * candidates inside each maximal run of consecutive candidates is
-    * EXACTLY the left-to-right greedy — expressible with windows over
-    * the vocab table on any engine (the oracle replays it in SQL).
-    * Per-word windows are fine HERE because rounds operate on the
-    * word-frequency table, never the corpus; at 100 TB the linear
-    * scan is the only corpus-sized stage (and production tokenizers
-    * train on a corpus sample anyway — feed a sampled `docs`).
+    * The corpus-sized work is ONE distributed aggregate: split on
+    * spaces and count each distinct word. Its word-frequency table is
+    * collected, and every merge round then runs on the driver, as in
+    * Sennrich et al.'s reference trainer: pair counts weighted by word
+    * frequency, the (count desc, pair ascending) argmax, and a
+    * left-to-right non-overlapping rewrite of each word. Pair counts
+    * are kept incrementally (subword-nmt's optimization): a round
+    * re-counts only the words that held the merged pair. So a call runs
+    * the word count's jobs and no more, whatever `nMerges` is; a
+    * per-round Spark loop would pay at least two jobs per merge, which
+    * at 30k merges never finishes.
     *
+    * Symbols are Unicode code points, the unit of Spark's `split(w, "")`
+    * and of SQL `substr`: a character outside the Basic Multilingual
+    * Plane is one symbol, never two surrogates. Pairs compare by code
+    * point, which is the UTF-8 byte order Spark and DuckDB sort strings
+    * by, so count ties break as an engine-side `ORDER BY` breaks them.
+    *
+    * Driver memory holds the collected table. `maxWords` bounds it: the
+    * aggregate then keeps only the top `maxWords` words by frequency
+    * (ties: word ascending) through a distributed top-k, and training
+    * runs on that head of the table — the trade every sampled tokenizer
+    * run makes, here deterministic instead of shard-order dependent.
+    *
+    * @param maxWords cap on the distinct words trained on;
+    *   `Int.MaxValue` (the default) trains on every word, exactly
     * @return one row per learned merge: (round, left, right,
-    *   pair_freq), round 1-based in merge order
+    *   pair_freq), round 1-based in merge order; fewer than `nMerges`
+    *   rows once no pair is left
     */
   def bpeTrain(docs: DataFrame, idCol: String, textCol: String,
-               nMerges: Int,
-               mat: graft.sources.Materializer =
-                 graft.sources.Materializer.Local): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nMerges > 0, "nMerges must be positive")
-    val spark = docs.sparkSession
-    // rounds iterate: freeze the word-frequency table once up front
-    // (mat = Reliable is the executor-churn cluster posture; the
-    // per-round freeBlocks below is a no-op for non-Local strategies)
-    var words = mat.freeze(docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("syms", split(col("w"), "")),
-      Seq("w"), "bpe_words")
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var round = 1
-    var exhausted = false
-    while (round <= nMerges && !exhausted) {
-      val top = words.filter(size(col("syms")) >= 2)
-        .select(col("freq"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"))
-        .select(col("p.0").as("a"), col("p.1").as("b"), col("freq"))
-        .groupBy("a", "b").agg(sum("freq").as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect() // the argmax: one row per round by design
-      if (top.isEmpty) exhausted = true
-      else {
-        val x: String = top(0).getString(0)
-        val y: String = top(0).getString(1)
-        val cnt: Long = top(0).getLong(2)
-        merges += ((round, x, y, cnt))
-        val byW = Window.partitionBy("w").orderBy("i")
-        val pos = words
-          .select(col("w"), col("freq"), posexplode(col("syms")).as(Seq("i", "s")))
-          .withColumn("cand", coalesce(
-            col("s") === lit(x) && lead(col("s"), 1).over(byW) === lit(y), lit(false)))
-          .withColumn("isl", when(col("cand"),
-            col("i") - sum(col("cand").cast("long")).over(byW)))
-          .withColumn("rn_isl",
-            row_number().over(Window.partitionBy(col("w"), col("isl")).orderBy(col("i"))))
-          .withColumn("ms", col("cand") && col("rn_isl") % 2 === 1)
-          .withColumn("dropped", lag(col("ms"), 1, false).over(byW))
-        val next = pos.filter(!col("dropped"))
-          .withColumn("out", when(col("ms"), lit(x + y)).otherwise(col("s")))
-          .groupBy("w", "freq")
-          .agg(expr("transform(array_sort(collect_list(struct(i, out))), p -> p.out)").as("syms"))
-        val nextFrozen = mat.freeze(next, Seq("w"), "bpe_words") // bounded plan per round
-        // localCheckpoint is eager, so `nextFrozen` is materialized — the
-        // previous round's checkpointed blocks are now dead. Note
-        // Dataset.unpersist would be a NO-OP here: localCheckpoint
-        // persists its internal RDD directly, never registering with
-        // the CacheManager that unpersist consults — so free the RDD
-        // itself, or retained blocks sit until the ContextCleaner GCs
-        // them (linear growth in nMerges meanwhile)
-        freeLocalCheckpoint(words)
-        words = nextFrozen
-        round += 1
-      }
-    }
-    freeLocalCheckpoint(words) // last round's table: merges are already driver-side
-    import spark.implicits._
-    merges.toSeq.toDF("round", "left", "right", "pair_freq")
-      .select(col("round").cast("long"), col("left"), col("right"), col("pair_freq"))
-  }
-
-  /** X4: BPE vocabulary training, SAMPLED/BOUNDED variant — the
-    * production-scale path for large merge counts (VERDICT r6 item 4:
-    * [[bpeTrain]]'s one-merge-per-round driver loop schedules 2 Spark
-    * jobs per round, a scheduler wall at nMerges=30k even though each
-    * job is tiny).
-    *
-    * The key observation (Sennrich et al. 2016's own reference
-    * implementation, and every production trainer since): after the
-    * ONE corpus-sized linear scan collapses the corpus to a
-    * word-frequency table, the merge loop's working set is bounded by
-    * the VOCABULARY, not the corpus — at 100 TB the distinct-word
-    * table is millions of rows, and capping it to the top `maxWords`
-    * by frequency (the standard trainer sampling knob) bounds it
-    * further. So: run the word count distributed, collect the bounded
-    * table once, and train all `nMerges` rounds driver-side with
-    * incremental pair-count maintenance — zero Spark jobs per round.
-    * nMerges=256 then costs milliseconds of CPU where the distributed
-    * loop costs 512 scheduled jobs.
-    *
-    * Semantics: identical to [[bpeTrain]] — same word split, same
-    * (count desc, pair lexicographic) argmax, same left-to-right
-    * non-overlapping rewrite — whenever `maxWords` covers every
-    * distinct word (BpeTrainProps pins the equivalence on random
-    * corpora). A tighter cap trains on the head of the frequency
-    * table: the trade every sampled tokenizer run makes, here
-    * deterministic (ties broken by word) instead of by corpus shard
-    * order.
-    *
-    * @param maxWords cap on distinct words trained on, top-frequency
-    *   first (ties: lexicographic); `Int.MaxValue` = exact
-    * @return one row per learned merge: (round, left, right,
-    *   pair_freq), round 1-based in merge order
-    */
-  def bpeTrainSampled(docs: DataFrame, idCol: String, textCol: String,
-                      nMerges: Int, maxWords: Int = Int.MaxValue): DataFrame = {
+               nMerges: Int, maxWords: Int = Int.MaxValue): DataFrame = {
     require(nMerges > 0, "nMerges must be positive")
     require(maxWords > 0, "maxWords must be positive")
     val spark = docs.sparkSession
-    // the one corpus-sized stage: distributed word count, deterministic
-    // top-maxWords cap — the ONLY driver-visible data is this bounded
-    // table (same contract as any trained-model collect)
-    val wordRows = docs
+    val counted = docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .orderBy(col("freq").desc, col("w"))
-      .limit(maxWords)
-      .collect()
-    // driver-side classic trainer with incremental pair maintenance:
-    // pair counts update only through the words that contained the
-    // merged pair (subword-nmt's optimization), so each round costs
-    // O(argmax scan + touched words), not a full recount
-    val syms = wordRows.map(_.getString(0).split(""))
+    // the merges do not depend on row order, so the exact path needs
+    // no sort; a cap needs the deterministic top-k
+    val wordRows =
+      if (maxWords == Int.MaxValue) counted.collect()
+      else counted.orderBy(col("freq").desc, col("w")).limit(maxWords).collect()
+    val syms = wordRows.map(r => codePointSymbols(r.getString(0)))
     val freq = wordRows.map(_.getLong(1))
     val pairCount = scala.collection.mutable.HashMap.empty[(String, String), Long]
     val pairWords = scala.collection.mutable.HashMap.empty[(String, String), scala.collection.mutable.BitSet]
@@ -745,55 +647,61 @@ object TextOps {
       }
     }
     syms.indices.foreach(addPairs(_, 1L))
+    val argmaxOrder = Ordering.Tuple3(Ordering.Long, CodePointOrder, CodePointOrder)
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
-    var round = 1
-    var exhausted = false
-    while (round <= nMerges && !exhausted) {
-      if (pairCount.isEmpty) exhausted = true
-      else {
-        // argmax: count desc, then pair lexicographic — bpeTrain's order
-        val ((x, y), cnt) = pairCount.minBy { case ((a, b), c) => (-c, a, b) }
-        merges += ((round.toLong, x, y, cnt))
-        // rewrite only words that (may) contain the pair; stale indices
-        // (pair merged away earlier) fail the contains check and skip
-        val touched = pairWords.remove((x, y)).getOrElse(scala.collection.mutable.BitSet.empty)
-        touched.foreach { wi =>
-          val s = syms(wi)
-          var contains = false
-          var i = 0
-          while (!contains && i + 1 < s.length) {
-            if (s(i) == x && s(i + 1) == y) contains = true
-            i += 1
-          }
-          if (contains) {
-            addPairs(wi, -1L) // retract the word's old pairs
-            val out = scala.collection.mutable.ArrayBuffer[String]()
-            i = 0
-            while (i < s.length) { // left-to-right non-overlapping greedy
-              if (i + 1 < s.length && s(i) == x && s(i + 1) == y) { out += x + y; i += 2 }
-              else { out += s(i); i += 1 }
-            }
-            syms(wi) = out.toArray
-            addPairs(wi, 1L)
-          }
+    while (merges.length < nMerges && pairCount.nonEmpty) {
+      val ((x, y), cnt) = pairCount.minBy { case ((a, b), c) => (-c, a, b) }(argmaxOrder)
+      merges += ((merges.length + 1L, x, y, cnt))
+      // rewrite only words that (may) contain the pair; stale indices
+      // (pair merged away earlier) fail the contains check and skip
+      val touched = pairWords.remove((x, y)).getOrElse(scala.collection.mutable.BitSet.empty)
+      touched.foreach { wi =>
+        val s = syms(wi)
+        var contains = false
+        var i = 0
+        while (!contains && i + 1 < s.length) {
+          if (s(i) == x && s(i + 1) == y) contains = true
+          i += 1
         }
-        round += 1
+        if (contains) {
+          addPairs(wi, -1L) // retract the word's old pairs
+          val out = scala.collection.mutable.ArrayBuffer[String]()
+          i = 0
+          while (i < s.length) { // left-to-right non-overlapping greedy
+            if (i + 1 < s.length && s(i) == x && s(i + 1) == y) { out += x + y; i += 2 }
+            else { out += s(i); i += 1 }
+          }
+          syms(wi) = out.toArray
+          addPairs(wi, 1L)
+        }
       }
     }
     import spark.implicits._
     merges.toSeq.toDF("round", "left", "right", "pair_freq")
   }
 
-  /** Eagerly release the block-manager storage behind a
-    * `localCheckpoint()`ed DataFrame. The checkpointed RDD lives in
-    * the plan as a `LogicalRDD` leaf; unpersisting THAT RDD frees its
-    * blocks now instead of whenever the ContextCleaner gets around to
-    * the GC'd reference. No-op for plans with no LogicalRDD leaf.
+  /** A word's code points, one string each — Spark's `split(w, "")`
+    * on a non-empty word (an empty word has no pairs either way).
     */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  private def codePointSymbols(w: String): Array[String] =
+    w.codePoints().toArray.map(cp => Character.toString(cp))
+
+  /** String order by code point, i.e. UTF-8 byte order. `String.compareTo`
+    * orders UTF-16 units instead, which puts a supplementary character
+    * (a surrogate pair, 0xD800..) before U+E000–U+FFFF.
+    */
+  private object CodePointOrder extends Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      var i = 0
+      var d = 0
+      while (d == 0 && i < a.length && i < b.length) {
+        val ca = a.codePointAt(i)
+        d = Integer.compare(ca, b.codePointAt(i))
+        i += Character.charCount(ca)
+      }
+      if (d != 0) d else Integer.compare(a.length, b.length)
+    }
+  }
 
   /** A small trained-merge stand-in vocabulary for [[bpeEncode]]:
     * every lowercase letter (so alphabetic text never falls back to
@@ -872,9 +780,9 @@ object TextOps {
     * (`␟s␟`, U+001F), so word "aaa" is `␟a␟␟a␟␟a␟` and merge (x,y) is
     * `replace(enc, "␟x␟␟y␟", "␟xy␟")` — literal `replace` scans
     * left-to-right over non-overlapping matches, which is EXACTLY the
-    * trainer's odd-candidate-in-run rule (adjacent candidates only
-    * arise for x = y, and the per-symbol separator pairs make the 1st,
-    * 3rd, … of each run match). One pass per merge suffices: a merge
+    * trainer's left-to-right rewrite (adjacent matches only arise for
+    * x = y, and the per-symbol separator pairs make the 1st, 3rd, … of
+    * each run match). One pass per merge suffices: a merge
     * removes every (x,y) adjacency and can't recreate one (the
     * product symbol differs from both operands, and leftover run
     * tails are never adjacent).

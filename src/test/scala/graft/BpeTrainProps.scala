@@ -6,21 +6,25 @@ import graft.llm.TextOps
 
 /** ScalaCheck properties for [[TextOps.bpeTrain]] against the classic
   * sequential-greedy BPE reference (the dictionary implementation from
-  * Sennrich et al. 2016): per round, count pairs weighted by word
+  * Sennrich et al. 2016): per round, recount pairs weighted by word
   * frequency, take the (count desc, pair asc) argmax, and rewrite each
-  * word with an explicit left-to-right scan. Words drawn from a 3-char
+  * word with an explicit left-to-right scan. Words drawn from a small
   * alphabet make equal-symbol runs ("aaaa"), count ties, and early
-  * exhaustion routine — exactly the cases where the engine's
-  * run-parity window formulation could diverge from the greedy scan.
+  * exhaustion routine — the cases where the trainer's incremental pair
+  * counts could drift from a full recount. The alphabet holds a
+  * supplementary-plane symbol (U+1D51E, two UTF-16 units) and U+FF5A,
+  * which sorts below it by code point but above it by UTF-16 unit.
   */
 object BpeTrainProps extends Properties("bpeTrain") {
 
-  // each case runs nMerges+1 Spark plans; keep the count bounded
+  // a bpeTrain case runs the word count's jobs only
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
-    p.withMinSuccessfulTests(8).withMaxSize(40)
+    p.withMinSuccessfulTests(30).withMaxSize(40)
 
   private lazy val spark = SparkSpec.spark
 
+  // properties use forAllNoShrink: shrinking a string drops single
+  // UTF-16 units, which splits U+1D51E into lone surrogates (not text)
   private val genCase: Gen[(List[String], Int)] = for {
     nDocs   <- Gen.choose(1, 3)
     nMerges <- Gen.choose(1, 5)
@@ -28,10 +32,17 @@ object BpeTrainProps extends Properties("bpeTrain") {
                  n  <- Gen.choose(1, 8)
                  ws <- Gen.listOfN(n, for {
                          len <- Gen.choose(1, 6)
-                         cs  <- Gen.listOfN(len, Gen.oneOf('a', 'b', 'c'))
+                         cs  <- Gen.listOfN(len, Gen.oneOf("a", "b", "c", "\uD835\uDD1E", "\uFF5A"))
                        } yield cs.mkString)
                } yield ws.mkString(" "))
   } yield (docs, nMerges)
+
+  /** A word's symbols: one per code point, as Spark's `split(w, "")`. */
+  private def symbols(w: String): List[String] =
+    w.codePoints().toArray.toList.map(cp => Character.toString(cp))
+
+  /** Pair order of the argmax: strings compare by code point. */
+  private def codePoints(s: String): List[Int] = s.codePoints().toArray.toList
 
   /** One greedy left-to-right merge pass — the reference rewrite. */
   private def mergeWord(syms: List[String], x: String, y: String): List[String] = {
@@ -47,7 +58,7 @@ object BpeTrainProps extends Properties("bpeTrain") {
   private def model(texts: Seq[String], nMerges: Int): Seq[(Long, String, String, Long)] = {
     var words: Seq[(List[String], Long)] = texts.flatMap(_.split(" ", -1))
       .groupBy(identity).view.mapValues(_.size.toLong).toSeq
-      .map { case (w, f) => (w.split("").toList, f) }
+      .map { case (w, f) => (symbols(w), f) }
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     var round = 1
     var done = false
@@ -57,7 +68,8 @@ object BpeTrainProps extends Properties("bpeTrain") {
         .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
       if (pairs.isEmpty) done = true
       else {
-        val ((x, y), cnt) = pairs.minBy { case ((a, b), c) => (-c, a, b) }
+        import Ordering.Implicits.seqOrdering
+        val ((x, y), cnt) = pairs.minBy { case ((a, b), c) => (-c, codePoints(a), codePoints(b)) }
         merges += ((round.toLong, x, y, cnt))
         words = words.map { case (s, f) => (mergeWord(s, x, y), f) }
         round += 1
@@ -66,50 +78,54 @@ object BpeTrainProps extends Properties("bpeTrain") {
     merges.toSeq
   }
 
-  property("matches the sequential-greedy reference") = Prop.forAll(genCase) {
+  /** Merge rounds cost no Spark job, so each case trains 8× deeper
+    * than the generated merge count: long merge chains and exhaustion.
+    */
+  property("matches the sequential-greedy reference") = Prop.forAllNoShrink(genCase) {
     case (docs, nMerges) =>
       import spark.implicits._
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val got = TextOps.bpeTrain(df, "doc_id", "text", nMerges)
-        .orderBy("round").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-      val want = model(docs, nMerges)
-      Prop(got == want) :| s"got=$got want=$want"
-  }
-
-  /** VERDICT r7 item 4: the driver-side sampled trainer is the SAME
-    * trainer when maxWords covers the vocabulary — pin it against the
-    * reference at full coverage, and at a deeper merge count than the
-    * distributed loop can afford per test case (the sampled path runs
-    * zero Spark jobs per round, so nMerges is free here).
-    */
-  property("bpeTrainSampled at full coverage matches the sequential-greedy reference") =
-    Prop.forAll(genCase) { case (docs, nMerges) =>
-      import spark.implicits._
-      val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("doc_id", "text")
-      val deep = nMerges * 8 // exercise long merge chains cheaply
-      val got = TextOps.bpeTrainSampled(df, "doc_id", "text", deep, maxWords = Int.MaxValue)
+      val deep = nMerges * 8
+      val got = TextOps.bpeTrain(df, "doc_id", "text", deep)
         .orderBy("round").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       val want = model(docs, deep)
       Prop(got == want) :| s"got=$got want=$want"
+  }
+
+  /** A cap that covers the whole vocabulary takes the distributed top-k
+    * path (the former `bpeTrainSampled`) yet keeps every word, so it
+    * must learn exactly what the uncapped trainer and the reference do.
+    */
+  property("bpeTrainSampled at full coverage matches the sequential-greedy reference") =
+    Prop.forAllNoShrink(genCase) { case (docs, nMerges) =>
+      import spark.implicits._
+      val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val vocab = docs.flatMap(_.split(" ", -1)).distinct.size
+      val deep = nMerges * 8
+      val got = TextOps.bpeTrain(df, "doc_id", "text", deep, maxWords = vocab)
+        .orderBy("round").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+      val want = model(docs, deep)
+      Prop(got == want) :| s"maxWords=$vocab got=$got want=$want"
     }
 
   /** The cap keeps only the top-frequency words: training on the
     * capped table equals training the reference on the same subset.
     */
-  property("bpeTrainSampled honors the deterministic top-frequency cap") =
-    Prop.forAll(genCase) { case (docs, nMerges) =>
+  property("honors the deterministic top-frequency cap") =
+    Prop.forAllNoShrink(genCase) { case (docs, nMerges) =>
       import spark.implicits._
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
       val allWords = docs.flatMap(_.split(" ", -1))
         .groupBy(identity).view.mapValues(_.size.toLong).toSeq
       val cap = (allWords.size / 2).max(1)
-      val kept = allWords.sortBy { case (w, f) => (-f, w) }.take(cap).map(_._1)
-      val got = TextOps.bpeTrainSampled(df, "doc_id", "text", nMerges, maxWords = cap)
+      import Ordering.Implicits.seqOrdering
+      val kept = allWords.sortBy { case (w, f) => (-f, codePoints(w)) }.take(cap).map(_._1)
+      val got = TextOps.bpeTrain(df, "doc_id", "text", nMerges, maxWords = cap)
         .orderBy("round").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       // reference trained on a synthetic corpus holding exactly the
@@ -128,7 +144,7 @@ object BpeTrainProps extends Properties("bpeTrain") {
     * .bpeEncode]]) only approximates.
     */
   property("bpeEncodeRanked reproduces the training segmentation merge-for-merge") =
-    Prop.forAll(genCase) { case (docs, nMerges) =>
+    Prop.forAllNoShrink(genCase) { case (docs, nMerges) =>
       import spark.implicits._
       val df = docs.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
@@ -137,7 +153,7 @@ object BpeTrainProps extends Properties("bpeTrain") {
         .orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
       def seg(w: String): List[String] =
-        merges.foldLeft(w.split("").toList) { case (s, (x, y)) => mergeWord(s, x, y) }
+        merges.foldLeft(symbols(w)) { case (s, (x, y)) => mergeWord(s, x, y) }
       val want = docs.zipWithIndex.map { case (t, i) =>
         val toks = t.split(" ", -1).filter(_.nonEmpty).toList.map(seg)
         (i.toLong, toks.map(_.length.toLong).sum, toks.map(_.mkString("|")).mkString("|"))

@@ -71,7 +71,7 @@ class DocExamplesSpec extends SparkSpec {
     TextOps.trigramLangIdFast(docs, "doc_id", "text", profiles = Seq(
       "en" -> Seq("the", "ing", "and"), "de" -> Seq("der", "sch", "ein")))
       .count() shouldBe 3
-    TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 5).count() shouldBe 5
+    TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 5, maxWords = 1 << 20).count() shouldBe 5
   }
 
   test("streaming batch-twin example (OPERATORS.md X6)") {

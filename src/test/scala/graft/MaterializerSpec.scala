@@ -87,18 +87,6 @@ class MaterializerSpec extends SparkSpec {
         mat = Materializer.Lazy)
   }
 
-  test("bpeTrain: bucketed freeze learns the identical merge sequence") {
-    val docs = Seq(
-      (1L, "low lower lowest low low"),
-      (2L, "new newer newest new"),
-      (3L, "low newer low lowest")
-    ).toDF("doc_id", "text")
-    def merges(mat: Materializer) =
-      graft.llm.TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 6, mat = mat)
-        .orderBy("round").collect().map(_.toSeq).toSeq
-    merges(Materializer.Bucketed(2)) shouldBe merges(Materializer.Local)
-  }
-
   test("Bucketed freeze leaves a real sorted bucketed table behind") {
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     val out = Materializer.Bucketed(2, prefix = "graft_mattest").freeze(df, Seq("k"), "probe")

@@ -433,6 +433,60 @@ class TextOpsSpec extends SparkSpec {
     got shouldBe Array(("b", "a"), ("d", "c")) // both count 2: (b,a) < (d,c)
   }
 
+  test("bpeTrain splits words by code point, not UTF-16 unit") {
+    // U+1D51E is one code point, two UTF-16 units: splitting by unit
+    // would learn (\uD835,\uDD1E) first
+    val f = "\uD835\uDD1E"
+    val docs = Seq((0L, s"a${f}${f}b a${f}${f}b a${f}${f}bx")).toDF("doc_id", "text")
+    def merges(maxWords: Int) =
+      TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 3, maxWords = maxWords)
+        .orderBy("round").collect().map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    val want = Seq(("a", f, 3L), ("a" + f, f, 3L), ("a" + f + f, "b", 3L))
+    merges(Int.MaxValue) shouldBe want
+    merges(2) shouldBe want // the capped top-k path: both distinct words kept
+  }
+
+  test("bpeTrain breaks ties in code-point order, as Spark and DuckDB sort strings") {
+    // (U+FF5A, x) and (U+1D51E, x) both count 2. By code point U+FF5A
+    // sorts first; by UTF-16 unit the surrogate 0xD835 would.
+    val z = "\uFF5A"
+    val f = "\uD835\uDD1E"
+    val docs = Seq((0L, s"${f}x ${f}x ${z}x ${z}x")).toDF("doc_id", "text")
+    val got = TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 2)
+      .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq
+    got shouldBe Seq((z, "x"), (f, "x"))
+    val sparkOrder = Seq(f, z).toDF("s").orderBy("s").collect().map(_.getString(0)).toSeq
+    sparkOrder shouldBe Seq(z, f)
+  }
+
+  test("bpeTrain runs a fixed number of Spark jobs, whatever nMerges is") {
+    val corpus = Seq(
+      (0L, "low lower lowest slow slower slowest"),
+      (1L, "new newer newest renew renewed wide wider widest")).toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    def jobsFor(nMerges: Int): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusSync.drain(sc) // earlier tests' jobs stay out
+      sc.addSparkListener(listener)
+      val n = try {
+        val learned = TextOps.bpeTrain(corpus, "doc_id", "text", nMerges).collect().length
+        org.apache.spark.ListenerBusSync.drain(sc)
+        learned
+      } finally sc.removeSparkListener(listener)
+      (jobs.get, n)
+    }
+    val (shallowJobs, shallowMerges) = jobsFor(2)
+    val (deepJobs, deepMerges) = jobsFor(40)
+    shallowMerges shouldBe 2
+    deepMerges should be > 20 // the deep call really runs many rounds
+    deepJobs shouldBe shallowJobs
+    shallowJobs should (be >= 1 and be <= 2)
+  }
+
   test("bigramSurprisal interpolates bigram and unigram exactly; first token is unigram-only") {
     // corpus "a b a": uni a:2 b:1 (total 3); bi (a,b):1 (b,a):1,
     // prefix totals a:1 b:1 — every probability hand-derivable

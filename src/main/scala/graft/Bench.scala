@@ -70,6 +70,21 @@ object Bench {
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
       .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
 
+  /** JSON string literal for a key or value written by the engine (a query
+    * name, an exception message, oracle SQL): escapes backslash, quote
+    * and ALL control chars (< 0x20), so a tab or CR cannot corrupt the
+    * artifact or make a `json.load` of it fail. Shared with [[Verify]].
+    */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** One timed rep's measurements (seconds + attribution fields). */
   private final case class Rep(sec: Double, err: Option[String], startMs: Long,
                                gcMs: Long, heapPeakMb: Long,
@@ -203,18 +218,6 @@ object Bench {
           f"[start +${(m.startMs - suiteStartMs) / 1000.0}%.1f s, gc ${m.gcMs} ms, " +
           f"heap peak ${m.heapPeakMb} MB, stage retries ${m.stageRetries}, failed tasks ${m.failedTasks}]")
     }
-    // Shared JSON string escape for every builder-authored key/value:
-    // a query name (or exception class) containing a quote, backslash
-    // or control char must not corrupt the artifact.
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     val qs = results.map { case (k, v, _, _) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")

@@ -4023,7 +4023,6 @@ object Queries {
     ("x4_bpe_train",
       (s: SparkSession, dir: String) => {
         TextOps.bpeTrain(Tables.load(s, dir, "documents"), "doc_id", "text", nMerges = 4)
-          .orderBy(col("round"))
       },
       Some {
         val rounds = (1 to 4).map(bpeTrainRoundSql).mkString(",\n")
@@ -4045,7 +4044,6 @@ object Queries {
       (s: SparkSession, dir: String) => {
         TextOps.bpeTrain(Tables.load(s, dir, "documents"), "doc_id", "text",
             nMerges = 4, maxWords = Int.MaxValue)
-          .orderBy(col("round"))
       },
       Some {
         val rounds = (1 to 4).map(bpeTrainRoundSql).mkString(",\n")
@@ -4072,10 +4070,7 @@ object Queries {
       (s: SparkSession, dir: String) => {
         val lowered = Tables.load(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("text"))
-        // sorted on the driver: a Spark sort of the few merge rows
-        // runs 3 jobs (sample, map, result)
-        val merges = TextOps.bpeTrain(lowered, "doc_id", "text", nMerges = 4)
-          .collect().sortBy(_.getLong(0))
+        val merges = TextOps.bpeTrain(lowered, "doc_id", "text", nMerges = 4).collect()
         val vocab = "abcdefghijklmnopqrstuvwxyz0123456789".map(_.toString) ++
           merges.map(r => r.getString(1) + r.getString(2)).toSeq
         TextOps.bpeEncode(lowered, "doc_id", "text", vocab).orderBy(col("doc_id"))
@@ -4126,8 +4121,7 @@ object Queries {
         val lowered = Tables.load(s, dir, "documents")
           .select(col("doc_id"), lower(col("text")).as("text"))
         val merges = TextOps.bpeTrain(lowered, "doc_id", "text",
-            nMerges = 8, maxWords = Int.MaxValue)
-          .collect().sortBy(_.getLong(0))
+            nMerges = 8, maxWords = Int.MaxValue).collect()
         val vocab = "abcdefghijklmnopqrstuvwxyz0123456789".map(_.toString) ++
           merges.map(r => r.getString(1) + r.getString(2)).toSeq
         TextOps.bpeEncode(lowered, "doc_id", "text", vocab).orderBy(col("doc_id"))

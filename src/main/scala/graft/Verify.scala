@@ -44,18 +44,6 @@ object Verify {
           .parquet(s"$outDir/$name")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Resolve index-table placeholders: the ANN oracles replay the
     // SAME persisted parquet index the engine queries loaded (built
     // above during the query run), so the path must be the one THIS
@@ -78,7 +66,7 @@ object Verify {
         m => Queries.ivfDeletedListsPath(sfDir, m.group(1).toInt))
     }
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(resolve(v))}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(resolve(v))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

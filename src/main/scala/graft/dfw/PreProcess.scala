@@ -158,9 +158,7 @@ object PreProcess {
   def generatorMulti(samples: DataFrame, configs: Seq[DbConfig],
                      orderCols: Seq[Column],
                      center: Boolean = false, extend: Boolean = false,
-                     numParts: Int = 0,
-                     mat: graft.sources.Materializer =
-                       graft.sources.Materializer.Lazy): DataFrame = {
+                     numParts: Int = 0): DataFrame = {
     require(configs.nonEmpty, "generatorMulti needs at least one database config")
     require(configs.map(_.db).distinct.length == configs.length,
       "one config per database")
@@ -174,21 +172,17 @@ object PreProcess {
       }
       (c.db, t, isInt, c.cv)
     }.toDF("db", "__train", "__is_int", "__cv")
-    // The union rank stays LAZY by default even with two consumers
-    // (centering on): r19 re-measured the r18 "freeze wins at sf0.1"
-    // result after the plan-stat partition sizing landed and it no
-    // longer holds at ANY decade — warmed TimeQ medians, idle box,
-    // gen_pipeline_multidb: sf0.1 Lazy 5.6 s vs frozen 7.6 s, sf1
+    // The union rank stays LAZY even with two consumers (centering
+    // on): r19 re-measured the r18 "freeze wins at sf0.1" result after
+    // the plan-stat partition sizing landed and it no longer holds at
+    // ANY decade — warmed TimeQ medians, idle box,
+    // gen_pipeline_multidb: sf0.1 lazy 5.6 s vs frozen 7.6 s, sf1
     // 13.2 vs 14.1, sf10 98 vs 263 (a localCheckpoint writes and
     // re-reads the FULL 75 M-row ranked table; the re-derivation the
     // second consumer pays is a pruned scan + range exchange, which
-    // scales with the pruned columns instead). `mat` remains the
-    // caller's knob for cluster scenarios (e.g. Bucketed when the
-    // ranked table feeds many MORE consumers than this pipeline's
-    // two). Values are identical either way; only re-execution policy
-    // differs.
+    // scales with the pruned columns instead).
     val ranked = SplitOps.rankByPermutationScalable(
-      samples, Seq("db", "descriptor", "cls"), orderCols, numParts, mat)
+      samples, Seq("db", "descriptor", "cls"), orderCols, numParts)
     val split = ranked.join(broadcast(cfg), "db")
       .withColumn("train_size",
         SplitOps.trainSizeColDyn(col("n"), col("__train"), col("__is_int"), col("__cv")))

@@ -115,31 +115,22 @@ object SplitOps {
     * explicit positive count pins it (tests, or callers that know the
     * distribution better than the stats do).
     *
-    * `mat` can freeze the ranked rows ONCE (the
-    * [[graft.sources.Materializer]] strategy knob). Default is `Lazy`
-    * — MEASURED, not assumed (r18 TimeQ, sf0.1/local[32]): the
-    * re-derivation the second consumer pays is a column-pruned scan +
-    * range exchange, and for single-consumer callers (w1/w3/w5 splits)
-    * or rank-of-near-unique-doubles callers (medianCi 2.6s → 9.3s,
-    * robustScale 2.8s → 9.3s frozen) an eager checkpoint of the full
-    * ranked table costs far more than the branch it saves. Opt in to
-    * `Local`/`Bucketed` only where the ranked subtree is expensive AND
-    * multiply consumed — e.g. [[graft.dfw.PreProcess.generatorMulti]]'s
-    * multi-table union rank (5.6s → 3.4s frozen). Values are
-    * bit-identical either way (freezing only removes re-execution).
+    * The ranked rows are NOT frozen, although two consumers (the
+    * offset aggregate and the final join) read them — MEASURED, not
+    * assumed (r18/r19 TimeQ): the re-derivation the second consumer
+    * pays is a column-pruned scan + range exchange, while an eager
+    * checkpoint writes the FULL ranked table (medianCi 2.6s → 9.3s,
+    * robustScale 2.8s → 9.3s frozen; generatorMulti's union rank at
+    * sf10 98 s lazy vs 263 s frozen).
     */
   def rankByPermutationScalable(df: DataFrame, clsCols: Seq[String],
-                                orderCols: Seq[Column], numParts: Int = 0,
-                                mat: graft.sources.Materializer =
-                                  graft.sources.Materializer.Lazy): DataFrame = {
+                                orderCols: Seq[Column], numParts: Int = 0): DataFrame = {
     val parted = df
       .repartitionByRange(resolveRangeParts(df, numParts),
         clsCols.map(col) ++ orderCols: _*)
       .withColumn("__pid", spark_partition_id())
     val localW = Window.partitionBy((clsCols :+ "__pid").map(col): _*).orderBy(orderCols: _*)
-    val local = mat.freeze(
-      parted.withColumn("__lrn", row_number().over(localW).cast("long")),
-      clsCols :+ "__pid", "rank2p")
+    val local = parted.withColumn("__lrn", row_number().over(localW).cast("long"))
     val counts = local.groupBy((clsCols :+ "__pid").map(col): _*).agg(count(lit(1)).as("__c"))
     val offW = Window.partitionBy(clsCols.map(col): _*).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -250,9 +250,7 @@ object TimeSeriesOps {
     *         surv_ppm`, ordered by duration
     */
   def kaplanMeier(df: DataFrame, durCol: Column, eventCol: Column,
-                  numParts: Int,
-                  mat: graft.sources.Materializer =
-                    graft.sources.Materializer.Local): DataFrame = {
+                  numParts: Int): DataFrame = {
     val byDur = df
       .select(durCol.cast("long").as("duration"),
         eventCol.cast("long").as("__e"))
@@ -260,7 +258,7 @@ object TimeSeriesOps {
       .agg(sum(col("__e")).as("d"),
         sum(lit(1L) - col("__e")).as("c"))
     val run = WindowOps.prefixSumScalable(byDur, col("duration"),
-      Seq(("rem", col("d") + col("c"))), numParts, mat)
+      Seq(("rem", col("d") + col("c"))), numParts)
     // total from the FROZEN prefix-sum output (identical exact-integer
     // sum) — aggregating `byDur` re-derived the raw scan + groupBy a
     // second time (same fix as QuantileOps.ksTest, r18)
@@ -275,7 +273,7 @@ object TimeSeriesOps {
             col("n_at_risk").cast("double")) * 1000000).cast("long"))
         .otherwise(lit(-1000000000000L))) // d = n: survival exactly 0
     WindowOps.prefixSumScalable(termed, col("duration"),
-        Seq(("lnS", col("__term_q"))), numParts, mat)
+        Seq(("lnS", col("__term_q"))), numParts)
       .withColumn("surv_ppm",
         round(exp(col("run_lnS").cast("double") / 1000000.0) * 1000000).cast("long"))
       .select(col("duration"), col("n_at_risk"), col("d"), col("c"), col("surv_ppm"))
@@ -408,12 +406,10 @@ object TimeSeriesOps {
     *         final tick — no "after" regime to average)
     */
   def cusumChangepoint(df: DataFrame, tickCol: Column, vCol: Column,
-                       numParts: Int,
-                       mat: graft.sources.Materializer =
-                         graft.sources.Materializer.Local): DataFrame = {
+                       numParts: Int): DataFrame = {
     val base = df.select(tickCol.as("__tick"), vCol.cast("long").as("__v"))
     val run = WindowOps.prefixSumScalable(base, col("__tick"),
-      Seq(("v", col("__v")), ("one", lit(1L))), numParts, mat)
+      Seq(("v", col("__v")), ("one", lit(1L))), numParts)
     // totals from the FROZEN prefix-sum output (identical exact-integer
     // sums) — aggregating `base` re-scanned the raw input a second time
     val tot = run.agg(sum(col("__v")).as("__tot"),

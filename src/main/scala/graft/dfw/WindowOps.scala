@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Materializer.freeze
+
 /** Scalable analytic-window evaluation for LOW-CARDINALITY partition
   * keys (the `q_analytics` shape: 5 `o_orderpriority` values means a
   * `Window.partitionBy(prio)` plan is ONE task per priority at any
@@ -47,16 +49,10 @@ object WindowOps {
     * @param valCol    column whose lag/lead is emitted as prev/next
     * @param nTiles    ntile bucket count
     * @param numParts  range partitions to spread each class across
-    * @param mat       how the range-partitioned data freezes (must be
-    *                  a real materialization — see below; `Bucketed`
-    *                  is the cluster-grade choice, `Local` the
-    *                  local-mode default)
     */
   def orderedAnalyticsScalable(df: DataFrame, clsCols: Seq[String],
                                orderCols: Seq[Column], valCol: String,
-                               nTiles: Int, numParts: Int = 0,
-                               mat: graft.sources.Materializer =
-                                 graft.sources.Materializer.Local): DataFrame = {
+                               nTiles: Int, numParts: Int = 0): DataFrame = {
     require(nTiles > 0, "nTiles must be positive")
     // numParts <= 0 → sized from the plan's stats (SplitOps
     // .adaptiveRangeParts): computed once on the driver, so both
@@ -74,18 +70,12 @@ object WindowOps {
     // global ranks overshoot n (observed: an 11th ntile on a 10-tile
     // request at 5k rows, where AQE coalesces aggressively). Freezing
     // ONE executed exchange, with __pid evaluated during that one
-    // execution, makes both consumers read the same mapping under ANY
-    // strategy — including Bucketed, where __pid is a stored column
-    // immune to how the readback scan splits files. Lazy is rejected:
-    // it would re-run the exchange per consumer, which is exactly the
-    // divergence this freeze exists to prevent.
-    require(mat.frozen,
-      "orderedAnalyticsScalable needs a real Materializer (Lazy re-runs the " +
-        "range exchange per consumer and the partition-id map diverges)")
-    val parted = mat.freeze(
+    // execution, makes both consumers read the same mapping. Without
+    // the freeze each consumer would re-run the exchange, which is
+    // exactly the divergence this freeze exists to prevent.
+    val parted = freeze(
       df.repartitionByRange(parts, clsCols.map(col) ++ orderCols: _*)
-        .withColumn("__pid", spark_partition_id()),
-      clsCols :+ "__pid", "win_parted")
+        .withColumn("__pid", spark_partition_id()))
     val keyP = (clsCols :+ "__pid").map(col)
     val localW = Window.partitionBy(keyP: _*).orderBy(orderCols: _*)
     val local = parted
@@ -140,19 +130,13 @@ object WindowOps {
     * prefix by definition.
     */
   def prefixMaxScalable(df: DataFrame, orderCol: Column, valCol: Column,
-                        numParts: Int = 0,
-                        mat: graft.sources.Materializer =
-                          graft.sources.Materializer.Local): DataFrame = {
+                        numParts: Int = 0): DataFrame = {
     val parts = SplitOps.resolveRangeParts(df, numParts)
     require(parts > 1, "numParts must spread the order over >1 partition")
-    require(mat.frozen,
-      "prefixMaxScalable needs a real Materializer (Lazy re-runs the " +
-        "range exchange per consumer and the partition-id map diverges)")
-    val parted = mat.freeze(
+    val parted = freeze(
       df.withColumn("__pv", valCol)
         .repartitionByRange(parts, orderCol)
-        .withColumn("__pid", spark_partition_id()),
-      Seq("__pid"), "pmax_parted")
+        .withColumn("__pid", spark_partition_id()))
     val localW = Window.partitionBy(col("__pid")).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = parted.withColumn("__lmax", max(col("__pv")).over(localW))
@@ -184,21 +168,15 @@ object WindowOps {
     * [[prefixMaxScalable]].
     */
   def prefixSumScalable(df: DataFrame, orderCol: Column,
-                        valCols: Seq[(String, Column)], numParts: Int = 0,
-                        mat: graft.sources.Materializer =
-                          graft.sources.Materializer.Local): DataFrame = {
+                        valCols: Seq[(String, Column)], numParts: Int = 0): DataFrame = {
     val parts = SplitOps.resolveRangeParts(df, numParts)
     require(parts > 1, "numParts must spread the order over >1 partition")
     require(valCols.nonEmpty, "at least one value column to sum")
-    require(mat.frozen,
-      "prefixSumScalable needs a real Materializer (Lazy re-runs the " +
-        "range exchange per consumer and the partition-id map diverges)")
     val named = valCols.map { case (n, c) => (n, s"__pv_$n") }
-    val parted = mat.freeze(
+    val parted = freeze(
       valCols.foldLeft(df) { case (d, (n, c)) => d.withColumn(s"__pv_$n", c) }
         .repartitionByRange(parts, orderCol)
-        .withColumn("__pid", spark_partition_id()),
-      Seq("__pid"), "psum_parted")
+        .withColumn("__pid", spark_partition_id()))
     val localW = Window.partitionBy(col("__pid")).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = named.foldLeft(parted) { case (d, (n, pv)) =>

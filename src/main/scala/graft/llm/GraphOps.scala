@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.Materializer
+import graft.sources.Materializer.freeze
 
 /** Link-graph centrality — the page-importance signal web-scale
   * corpus curation weights documents by (CommonCrawl-style crawls
@@ -29,23 +29,24 @@ import graft.sources.Materializer
   *    broadcasts it into the join (plan-asserted), so a round costs
   *    one scan of the edge list + one aggregate. At 100 TB of edges
   *    with |V| past broadcast range, the same plan degrades to a
-  *    co-partitioned shuffle join on `src` — freeze the edge list
-  *    through `mat = Materializer.Bucketed(n)` (bucketed by `src`,
-  *    [[graft.sources.Materializer]]) and the per-round shuffle
-  *    disappears too. For horizons past a handful of rounds,
-  *    `localCheckpoint` the rank table every ~5 rounds to truncate
-  *    lineage.
+  *    co-partitioned shuffle join on `src`.
   *
-  * Every operator here takes a `mat: Materializer` deciding HOW the
-  * static per-round intermediates (edge list + degrees, node set)
-  * freeze: `Local` (localCheckpoint — local-mode default, lost on
-  * executor failure), `Reliable` (HDFS/S3 checkpoint — survives
-  * executor churn on a real cluster), `Bucketed` (catalog table keyed
-  * on the round-join key — reliable AND exchange-free rounds), or
-  * `Lazy` (no freeze; every round re-derives — correct but k-round =
-  * (k+1)-derivation cost).
+  * Every operator here freezes its static per-round intermediates
+  * (edge list + degrees, node set) once through
+  * [[graft.sources.Materializer.freeze]], and the loops freeze their
+  * growing per-round table at a fixed cadence (every 8 rounds; every
+  * 5 for label propagation) to cap plan depth.
+  * Freezing only removes re-execution: values are bit-identical to
+  * the unrolled plan.
   */
 object GraphOps {
+
+  /** Rounds between freezes of a loop's growing per-round table. */
+  private val FreezeEvery = 8
+
+  /** [[minLabelPropagate]] references its label table twice per round,
+    * so its unfrozen plan doubles per round: freeze more often. */
+  private val LabelFreezeEvery = 5
 
   /** Fixed-iteration integer PageRank.
     *
@@ -60,11 +61,8 @@ object GraphOps {
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
                   scale: Long = 1000000L,
-                  mat: Materializer = Materializer.Local,
-                  broadcastRanks: Boolean = true,
-                  freezeEvery: Int = 8): DataFrame = {
+                  broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    require(freezeEvery >= 0)
     def hint(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     // Freeze the deduped edge list FIRST: three consumers follow (the
     // degree aggregate, the join probe side, and the node set), and
@@ -72,26 +70,21 @@ object GraphOps {
     // list built from a join, that is three executions of the join +
     // distinct (measured 4.8 s → 3.1 s on g1_pagerank at sf0.1 from
     // this one change; guide §2.4 "remove shuffles outright").
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct(),
-      Seq("src"), "pr_e")
+        col(dstCol).cast("long").as("dst")).distinct())
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     // Static across rounds: edge list with outdegree, and the node set.
     // Under one lazy plan each round would RE-DERIVE both from the raw
-    // input (k rounds = k+1 scans of the upstream joins); `mat` freezes
-    // them once — Bucketed keys the edge table by `src`, the column
-    // every round joins ranks on, so past-broadcast rounds run
-    // exchange-free on the edge side. A checkpointed edge table has NO
-    // catalyst size stats (Scan ExistingRDD), so the |V|-sized
-    // rank/summed sides carry an explicit broadcast hint
-    // (`broadcastRanks`); set it false past broadcast range and the
-    // rounds run as co-partitioned joins.
-    val ed = mat.freeze(e.join(deg, "src"), Seq("src"), "pr_edges")
-    val nodes = mat.freeze(
+    // input (k rounds = k+1 scans of the upstream joins), so both are
+    // frozen once. A checkpointed edge table has NO catalyst size stats
+    // (Scan ExistingRDD), so the |V|-sized rank/summed sides carry an
+    // explicit broadcast hint (`broadcastRanks`); set it false past
+    // broadcast range and the rounds run as co-partitioned joins.
+    val ed = freeze(e.join(deg, "src"))
+    val nodes = freeze(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(),
-      Seq("node"), "pr_nodes")
+        .union(e.select(col("dst").as("node"))).distinct())
     val teleport = scale * (dampDen - dampNum) / dampDen
 
     var rank = nodes.select(col("node"), lit(scale).as("rank"))
@@ -107,11 +100,9 @@ object GraphOps {
             .as("rank"))
       // rank lineage grows by one join+agg layer per round; at deep
       // iteration counts catalyst analysis dominates the round time.
-      // Freezing the |V|-row rank table every freezeEvery rounds caps
-      // plan depth — bit-identical values (spec-pinned at several
-      // cadences); 0 disables (the fully unrolled oracle-replay shape)
-      if (freezeEvery > 0 && i % freezeEvery == 0 && i < iters && mat.frozen)
-        rank = mat.freeze(rank, Seq("node"), s"pr_rank_$i")
+      // Freezing the |V|-row rank table every FreezeEvery rounds caps
+      // plan depth — bit-identical values (spec-pinned past a freeze)
+      if (i % FreezeEvery == 0 && i < iters) rank = freeze(rank)
     }
     rank
   }
@@ -129,26 +120,21 @@ object GraphOps {
                           weightCol: String, iters: Int,
                           dampNum: Long = 85L, dampDen: Long = 100L,
                           scale: Long = 1000000L,
-                          mat: Materializer = Materializer.Local,
-                          broadcastRanks: Boolean = true,
-                          freezeEvery: Int = 8): DataFrame = {
+                          broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    require(freezeEvery >= 0)
     def hint(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     // freeze the aggregated edge list first — same three-consumer
     // re-derivation as pageRankInt (see the comment there)
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"),
           col(weightCol).cast("long").as("w"))
-        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")),
-      Seq("src"), "prw_e")
+        .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
     val deg = e.groupBy(col("src")).agg(sum(col("w")).as("outw"))
-    val ed = mat.freeze(e.join(deg, "src"), Seq("src"), "prw_edges")
-    val nodes = mat.freeze(
+    val ed = freeze(e.join(deg, "src"))
+    val nodes = freeze(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(),
-      Seq("node"), "prw_nodes")
+        .union(e.select(col("dst").as("node"))).distinct())
     val teleport = scale * (dampDen - dampNum) / dampDen
 
     var rank = nodes.select(col("node"), lit(scale).as("rank"))
@@ -163,8 +149,7 @@ object GraphOps {
           (lit(teleport) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
             .as("rank"))
       // same deep-iteration lineage cap as pageRankInt (bit-identical)
-      if (freezeEvery > 0 && i % freezeEvery == 0 && i < iters && mat.frozen)
-        rank = mat.freeze(rank, Seq("node"), s"prw_rank_$i")
+      if (i % FreezeEvery == 0 && i < iters) rank = freeze(rank)
     }
     rank
   }
@@ -188,26 +173,21 @@ object GraphOps {
     */
   def minLabelPropagate(edges: DataFrame, srcCol: String, dstCol: String,
                         iters: Int,
-                        mat: Materializer = Materializer.Local,
-                        broadcastLabels: Boolean = true,
-                        ckptEvery: Int = 5): DataFrame = {
+                        broadcastLabels: Boolean = true): DataFrame = {
     require(iters >= 0)
-    require(ckptEvery > 0, "ckptEvery must be positive")
     def hint(df: DataFrame) = if (broadcastLabels) broadcast(df) else df
     val raw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // symmetric edge set frozen keyed by `b` — the side every round's
-    // neighbor-label join probes. union(raw, raw.swap) looks like it
+    // symmetric edge set, frozen once — every round's neighbor-label
+    // join probes it. union(raw, raw.swap) looks like it
     // derives `raw` twice, but ReuseExchange shares the upstream
     // join's shuffles between the branches and the two projections run
     // in parallel — measured FASTER than an explode-based single-scan
     // symmetrization at sf0.1 (g4_label_prop 2.83 s vs 3.16 s), so the
     // union form stays.
-    val e = mat.freeze(
-      raw.union(raw.select(col("b").as("a"), col("a").as("b"))).distinct(),
-      Seq("b"), "lp_edges")
-    val nodes = mat.freeze(e.select(col("a").as("node")).distinct(),
-      Seq("node"), "lp_nodes")
+    val e = freeze(
+      raw.union(raw.select(col("b").as("a"), col("a").as("b"))).distinct())
+    val nodes = freeze(e.select(col("a").as("node")).distinct())
     var lab = nodes.select(col("node"), col("node").as("label"))
     for (i <- 1 to iters) {
       val neigh = e.join(hint(lab.withColumnRenamed("node", "b")
@@ -220,11 +200,9 @@ object GraphOps {
       // per round — 2^iters subtree copies by the end, which stalls
       // catalyst long before data size matters (observed at iters=21
       // on a 60-node graph). Freezing the |V|-row label table every
-      // ckptEvery rounds caps growth at 2^ckptEvery between freezes;
-      // deep-diameter probes stay linear-time. Lazy deliberately keeps
-      // the unbounded form (single-digit-round probes only).
-      if (i % ckptEvery == 0 && i < iters && mat.frozen)
-        lab = mat.freeze(lab, Seq("node"), s"lp_lab_$i")
+      // LabelFreezeEvery rounds caps growth at 2^LabelFreezeEvery
+      // between freezes; deep-diameter probes stay linear-time.
+      if (i % LabelFreezeEvery == 0 && i < iters) lab = freeze(lab)
     }
     lab
   }
@@ -257,23 +235,19 @@ object GraphOps {
     *         gcc_ppm = 3·triangles·10⁶ div wedges (global clustering
     *         coefficient in parts-per-million; 0 when wedge-free)
     */
-  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
-                    mat: Materializer = Materializer.Local): DataFrame = {
+  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // canonical undirected edge set: (lo, hi), no loops, no dups.
     // Five downstream branches (degree, orientation, wedge self-join
     // probe, and the four census aggregates) all consume `e`; under
     // one lazy plan each branch re-derives it from the raw input —
     // for a derived edge list (e.g. a co-occurrence self-join) that
-    // multiplies the most expensive stage of the whole query.
-    // `mat` caps it at one derivation (Bucketed keys by `u`, the
-    // wedge-closing probe's leading join column; Reliable for
-    // executor-churn clusters).
-    val e = mat.freeze(
+    // multiplies the most expensive stage of the whole query. The
+    // freeze caps it at one derivation.
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-        .distinct(),
-      Seq("u"), "tri_edges")
+        .distinct())
     val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // orient by (deg, node): strict total order, ties broken by id
@@ -318,8 +292,8 @@ object GraphOps {
     * Per round: one degree aggregate and two LEFT-SEMI joins against
     * the surviving-node set (never materializing a node×node
     * structure), with the edge set frozen per round so the next
-    * round's two consumers re-read files rather than re-deriving the
-    * peel. All-integer output — replayable by an unrolled oracle.
+    * round's two consumers re-read stored rows rather than re-deriving
+    * the peel. All-integer output — replayable by an unrolled oracle.
     *
     * @param edges undirected edge list; both directions are derived
     *              internally, self-loops dropped
@@ -328,23 +302,21 @@ object GraphOps {
     *         peel, ordered by round
     */
   def kCoreProbe(edges: DataFrame, srcCol: String, dstCol: String,
-                 k: Int, rounds: Int,
-                 mat: Materializer = Materializer.Local): DataFrame = {
+                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     val raw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
     // union form kept deliberately — see [[minLabelPropagate]]'s
     // ReuseExchange note (explode-symmetrize measured slower)
-    var e = mat.freeze(
-      raw.union(raw.select(col("b").as("a"), col("a").as("b"))).distinct(),
-      Seq("a"), "kcore_e0")
+    var e = freeze(
+      raw.union(raw.select(col("b").as("a"), col("a").as("b"))).distinct())
     val perRound = (1 to rounds).map { r =>
       val deg = e.groupBy(col("a")).agg(count(lit(1)).as("__deg"))
       val keep = deg.filter(col("__deg") >= k).select(col("a").as("__n"))
       val e2 = e
         .join(keep.withColumnRenamed("__n", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("__n", "b"), Seq("b"), "left_semi")
-      e = mat.freeze(e2, Seq("a"), s"kcore_e$r")
+      e = freeze(e2)
       e.agg(
           countDistinct(col("a")).as("n_nodes"),
           count(lit(1)).as("n_edges"),
@@ -370,8 +342,8 @@ object GraphOps {
     * deg·scale and the normalize multiply adds ×scale — exact to
     * deg ≈ 9×10⁶ at scale 10⁶; promote to decimal beyond.)
     *
-    * Scale shape mirrors [[pageRankInt]]: the edge table freezes once
-    * (bucketed by the join side), per-round score tables carry the
+    * Scale shape mirrors [[pageRankInt]]: the edge table freezes once,
+    * per-round score tables carry the
     * `broadcastScores` hint while |V| is broadcastable, flip it false
     * past that and rounds run as keyed shuffle joins.
     *
@@ -381,20 +353,16 @@ object GraphOps {
     */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
               rounds: Int, scale: Long = 1000000L,
-              mat: Materializer = Materializer.Local,
               broadcastScores: Boolean = true): DataFrame = {
     require(rounds >= 1 && scale > 0)
     def hint(df: DataFrame) = if (broadcastScores) broadcast(df) else df
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct(),
-      Seq("src"), "hits_edges")
-    val nodes = mat.freeze(
+        col(dstCol).cast("long").as("dst")).distinct())
+    val nodes = freeze(
       e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct(),
-      Seq("node"), "hits_nodes")
+        .union(e.select(col("dst").as("node"))).distinct())
 
-    var step = 0
     def normalized(summed0: DataFrame, out: String): DataFrame = {
       // summed is consumed TWICE per half-step (the max aggregate and
       // the node join), and its plan contains the whole previous
@@ -402,10 +370,8 @@ object GraphOps {
       // (2^(2·rounds) subtree copies; g7_hits' 8.7 s at sf0.1 was
       // catalyst + recompute cost, not data). Freezing the ≤|V|-row
       // sum table once per half-step makes every half-step's plan
-      // constant-size. Values are untouched (spec-pinned); Lazy keeps
-      // the unrolled single-plan shape for oracle replay.
-      step += 1
-      val summed = mat.freeze(summed0, Seq("node"), s"hits_sum_$step")
+      // constant-size. Values are untouched (spec-pinned).
+      val summed = freeze(summed0)
       // max over ≤|V| rows — one-row broadcast; all-zero degenerates
       // to max 1 (scores stay 0)
       val mx = summed.agg(greatest(max(col("s")), lit(1L)).as("mx"))
@@ -453,26 +419,23 @@ object GraphOps {
     *         (score_q desc, x, y)
     */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-                 maxDeg: Int = 64, topK: Int = 50,
-                 mat: Materializer = Materializer.Local): DataFrame = {
+                 maxDeg: Int = 64, topK: Int = 50): DataFrame = {
     require(maxDeg >= 2 && topK >= 1)
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-        .distinct(),
-      Seq("u"), "aa_edges")
+        .distinct())
     val adj = e.select(col("u").as("node"), col("v").as("nbr"))
       .union(e.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // the wedge self-join consumes this table TWICE (both pairing
     // sides); unfrozen, the adjacency + degree join computes twice —
     // freeze the ≤2|E|-row scored adjacency once (values unchanged)
-    val pairable = mat.freeze(adj
+    val pairable = freeze(adj
       .join(deg.filter(col("deg") >= 2 && col("deg") <= maxDeg), Seq("node"))
       .withColumn("aa_q",
-        round(lit(1e6) / log(col("deg").cast("double"))).cast("long")),
-      Seq("node"), "aa_pairable")
+        round(lit(1e6) / log(col("deg").cast("double"))).cast("long")))
     val r = pairable.select(col("node").as("node2"), col("nbr").as("nbr2"))
     val scored = pairable
       .join(r, col("node") === col("node2") && col("nbr") < col("nbr2"))
@@ -499,8 +462,8 @@ object GraphOps {
     * formulation (which joins all of `dist` every round) by the
     * frontier/|V| ratio. The frontier freezes every round (it is
     * consumed twice: expansion join + seen-set union); the growing
-    * seen set freezes on the [[pageRankInt]] `freezeEvery` cadence to
-    * cap lineage depth. Bounded `maxHops` keeps the loop free of
+    * seen set freezes every 8 rounds, as [[pageRankInt]]'s rank table
+    * does, to cap lineage depth. Bounded `maxHops` keeps the loop free of
     * driver-side convergence counts (an empty frontier makes the
     * remaining rounds no-ops at one empty-join each).
     *
@@ -512,29 +475,23 @@ object GraphOps {
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String, maxHops: Int,
-              mat: Materializer = Materializer.Local,
-              broadcastFrontier: Boolean = true,
-              freezeEvery: Int = 8): DataFrame = {
+              broadcastFrontier: Boolean = true): DataFrame = {
     require(maxHops >= 0)
-    require(freezeEvery >= 0)
     def hint(df: DataFrame) = if (broadcastFrontier) broadcast(df) else df
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")).distinct(),
-      Seq("src"), "bfs_edges")
+        col(dstCol).cast("long").as("dst")).distinct())
     var dist = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
     var frontier = dist.select(col("node"))
     for (k <- 1 to maxHops) {
-      val nxt = mat.freeze(
+      val nxt = freeze(
         e.join(hint(frontier.withColumnRenamed("node", "src")), "src")
           .select(col("dst").as("node")).distinct()
-          .join(dist.select(col("node")), Seq("node"), "left_anti"),
-        Seq("node"), s"bfs_frontier_$k")
+          .join(dist.select(col("node")), Seq("node"), "left_anti"))
       dist = dist.union(nxt.select(col("node"), lit(k.toLong).as("dist")))
       frontier = nxt
-      if (freezeEvery > 0 && k % freezeEvery == 0 && k < maxHops && mat.frozen)
-        dist = mat.freeze(dist, Seq("node"), s"bfs_dist_$k")
+      if (k % FreezeEvery == 0 && k < maxHops) dist = freeze(dist)
     }
     dist
   }
@@ -553,7 +510,7 @@ object GraphOps {
     * Parallel (src, dst) edges pre-collapse to their minimum weight.
     * Per round: one keyed join (edges ⋈ dist) + one min-aggregate;
     * the distance table carries the [[pageRankInt]] broadcast hint
-    * while it fits, and freezes on the `freezeEvery` cadence.
+    * while it fits, and freezes every 8 rounds.
     * Negative weights are rejected — bounded-round Bellman-Ford would
     * be well-defined, but no corpus-curation cost is negative and
     * rejecting them keeps "dist never increases across rounds" as an
@@ -564,20 +521,16 @@ object GraphOps {
     */
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
               seeds: DataFrame, seedCol: String, rounds: Int,
-              mat: Materializer = Materializer.Local,
-              broadcastDist: Boolean = true,
-              freezeEvery: Int = 8): DataFrame = {
+              broadcastDist: Boolean = true): DataFrame = {
     require(rounds >= 0)
-    require(freezeEvery >= 0)
     def hint(df: DataFrame) = if (broadcastDist) broadcast(df) else df
-    val e = mat.freeze(
+    val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"),
           when(col(wCol).cast("long") < 0,
             raise_error(lit("ssspInt: negative edge weight")))
             .otherwise(col(wCol).cast("long")).as("w"))
-        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")),
-      Seq("src"), "sssp_edges")
+        .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
     var dist = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
     for (k <- 1 to rounds) {
@@ -585,8 +538,7 @@ object GraphOps {
         .join(hint(dist.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       dist = dist.union(cand).groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (freezeEvery > 0 && k % freezeEvery == 0 && k < rounds && mat.frozen)
-        dist = mat.freeze(dist, Seq("node"), s"sssp_dist_$k")
+      if (k % FreezeEvery == 0 && k < rounds) dist = freeze(dist)
     }
     dist
   }

@@ -614,8 +614,10 @@ object TextOps {
     * @param maxWords cap on the distinct words trained on;
     *   `Int.MaxValue` (the default) trains on every word, exactly
     * @return one row per learned merge: (round, left, right,
-    *   pair_freq), round 1-based in merge order; fewer than `nMerges`
-    *   rows once no pair is left
+    *   pair_freq), round 1-based; fewer than `nMerges` rows once no
+    *   pair is left. The rows are a driver-built local relation IN
+    *   ROUND ORDER: collecting them runs no Spark job, and callers
+    *   need no `orderBy("round")`.
     */
   def bpeTrain(docs: DataFrame, idCol: String, textCol: String,
                nMerges: Int, maxWords: Int = Int.MaxValue): DataFrame = {

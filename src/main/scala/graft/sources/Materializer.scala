@@ -1,103 +1,24 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.DataFrame
 
-/** Mid-plan materialization strategy for the iterative / multi-consumer
-  * operators (PageRank rounds, label propagation, triangle census,
-  * the range-partitioned analytics window, BPE training): each of them
-  * derives an expensive intermediate (edge list + degrees, a frozen
-  * range partitioning, a pair table) that MULTIPLE downstream
-  * executions consume — left lazy, every consumer re-derives it from
-  * the raw input, and for the window case the re-derived partitioning
-  * can even DISAGREE between consumers (per-branch range sampling +
-  * AQE coalescing; the round-12 partition-id bug).
+/** The one mid-plan freeze of the iterative / multi-consumer operators
+  * (graph rounds, the range-partitioned windows, the session table):
+  * each derives an intermediate that several downstream executions
+  * consume. Left lazy, every consumer re-derives it from the raw input,
+  * and for the windows the re-derived range partitioning can even
+  * DISAGREE between consumers (per-branch range sampling + AQE
+  * coalescing; the round-12 partition-id bug).
   *
-  * The right freeze depends on where the job runs, so it is a
-  * strategy PARAMETER, not a hard-coded call:
-  *
-  *  - [[Materializer.Local]] — `localCheckpoint()`: executor-local
-  *    shuffle/storage blocks, zero extra infrastructure, **lost on
-  *    executor failure**. The right default in local mode and for
-  *    short jobs on stable executors.
-  *  - [[Materializer.Reliable]] — `checkpoint()` to the
-  *    SparkContext's checkpoint directory (HDFS/S3 on a cluster):
-  *    survives executor churn, so a 3-hour iterative job on 1000
-  *    preemptible executors resumes instead of dying mid-round.
-  *    Requires `SparkContext.setCheckpointDir` first.
-  *  - [[Materializer.Bucketed]] — write a bucketed+sorted catalog
-  *    table ([[Sinks.writeBucketed]]) keyed by the column(s) the
-  *    downstream rounds join/aggregate on, and read it back. Reliable
-  *    AND layout-aware: every subsequent round's join against the
-  *    frozen side starts from hash-bucketed files (no re-shuffle of
-  *    the big side per round while bucketed reads are enabled), and
-  *    the table outlives the session for replay/debugging.
-  *  - [[Materializer.Lazy]] — no freeze at all (each consumer
-  *    re-derives). Only for single-consumer plans or benchmarking the
-  *    re-derivation cost; operators whose CORRECTNESS needs a frozen
-  *    partitioning (WindowOps) reject it.
+  * The freeze is `localCheckpoint()`: executor-local blocks, no extra
+  * infrastructure, lost on executor failure. Keeping it in this one
+  * module keeps the checkpoint policy in one place and gives every
+  * freeze job the same call site (`localCheckpoint at
+  * Materializer.scala`), which job-level tracing attributes to
+  * checkpointing.
   */
-sealed trait Materializer {
-
-  /** Materialize `df` once for multi-consumer / multi-round reads.
-    *
-    * @param keyCols the key downstream rounds join or aggregate on —
-    *                the bucketing key for [[Materializer.Bucketed]]
-    *                (checkpoint strategies ignore it)
-    * @param tag     short identifier-safe label for the frozen
-    *                intermediate (names the catalog table)
-    */
-  def freeze(df: DataFrame, keyCols: Seq[String], tag: String): DataFrame
-
-  /** true when rows are computed exactly once (any strategy but Lazy). */
-  def frozen: Boolean = this != Materializer.Lazy
-}
-
 object Materializer {
 
-  case object Lazy extends Materializer {
-    def freeze(df: DataFrame, keyCols: Seq[String], tag: String): DataFrame = df
-  }
-
-  case object Local extends Materializer {
-    def freeze(df: DataFrame, keyCols: Seq[String], tag: String): DataFrame =
-      df.localCheckpoint()
-  }
-
-  case object Reliable extends Materializer {
-    def freeze(df: DataFrame, keyCols: Seq[String], tag: String): DataFrame = {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "Materializer.Reliable needs SparkContext.setCheckpointDir(<hdfs/s3 path>) first")
-      df.checkpoint()
-    }
-  }
-
-  /** @param buckets bucket count — size so a bucket's rows fit one
-    *                task comfortably (|rows| / buckets ≈ 10⁶–10⁷)
-    * @param prefix  catalog-table name prefix; each freeze appends the
-    *                site tag and a counter so concurrent freezes never
-    *                collide within a session
-    */
-  final case class Bucketed(buckets: Int, prefix: String = "graft_mat") extends Materializer {
-    require(buckets > 0, "bucket count must be positive")
-    def freeze(df: DataFrame, keyCols: Seq[String], tag: String): DataFrame = {
-      require(keyCols.nonEmpty, "Materializer.Bucketed needs the downstream join/agg key")
-      val safe = tag.toLowerCase.replaceAll("[^a-z0-9_]", "_")
-      // the run tag keeps names unique ACROSS JVMs sharing a warehouse
-      // directory: an in-memory catalog forgets a previous process's
-      // tables while their locations survive on disk, and a bare
-      // counter would then die on locationAlreadyExists
-      val table = s"${prefix}_${safe}_${Bucketed.runTag}_${Bucketed.counter.incrementAndGet()}"
-      Sinks.writeBucketed(df, table, buckets, keyCols)
-      df.sparkSession.table(table)
-    }
-  }
-
-  object Bucketed {
-    private val counter = new AtomicLong(0L)
-    private val runTag: String =
-      java.lang.Long.toHexString(java.lang.ProcessHandle.current().pid() ^
-        (System.nanoTime() << 16))
-  }
+  /** Compute `df` once and return a plan that reads the stored rows. */
+  def freeze(df: DataFrame): DataFrame = df.localCheckpoint()
 }

@@ -207,7 +207,7 @@ object StreamOps {
     * bounce rate (single-event sessions, integer ppm), total events,
     * and exact p50/p90 session duration.
     *
-    * Scale notes: the session table is frozen ONCE via `mat` (two
+    * Scale notes: the session table is frozen ONCE (two
     * consumers — the scalar aggregate and the quantile pass — would
     * otherwise each replay the per-user sessionize window); durations
     * are nearly unique per session, exactly the grain where
@@ -218,11 +218,8 @@ object StreamOps {
     * seconds scale (micros-magnitude ulps vs round(4), as in
     * FunnelOps.funnelTransitionStats).
     */
-  def sessionStats(events: DataFrame, gapMinutes: Int,
-                   mat: graft.sources.Materializer =
-                     graft.sources.Materializer.Local): DataFrame = {
-    val s = mat.freeze(sessionizeBatch(events, gapMinutes),
-      Seq("user_id"), "sessions")
+  def sessionStats(events: DataFrame, gapMinutes: Int): DataFrame = {
+    val s = graft.sources.Materializer.freeze(sessionizeBatch(events, gapMinutes))
     val scalars = s.agg(
       count(lit(1)).as("n_sessions"),
       countDistinct(col("user_id")).as("n_users"),

@@ -235,42 +235,91 @@ class GraphOpsSpec extends SparkSpec {
     nodes.map(n => (n, hub(n), auth(n)))
   }
 
-  test("hitsInt: Local and Lazy are bit-identical to the in-memory reference HITS") {
+  test("hitsInt: bit-identical to the in-memory reference HITS over four rounds") {
     val edges = Seq((1L, 10L), (2L, 10L), (2L, 11L), (3L, 11L), (3L, 12L),
       (4L, 10L), (4L, 12L), (4L, 12L))
-    // Lazy unrolls every half-step into one plan that doubles per
-    // half-step, so it is checked at one round; Local freezes per
-    // half-step and is checked at four
-    for ((mat, rounds) <- Seq(graft.sources.Materializer.Local -> 4,
-                              graft.sources.Materializer.Lazy -> 1)) {
-      val got = GraphOps.hitsInt(edges.toDF("src", "dst"), "src", "dst", rounds = rounds, mat = mat)
-        .as[(Long, Long, Long)].collect().toSeq
-      withClue(s"$mat, $rounds rounds: ") { got shouldBe hitsReference(edges, rounds) }
-    }
+    val got = GraphOps.hitsInt(edges.toDF("src", "dst"), "src", "dst", rounds = 4)
+      .as[(Long, Long, Long)].collect().toSeq
+    got shouldBe hitsReference(edges, 4)
   }
 
-  test("pageRankInt: freezeEvery cadence never changes values (VERDICT r13/r14)") {
+  // The loops freeze their per-round table after round 8 (label
+  // propagation: after rounds 5, 10, ...); the tests below run past
+  // those rounds against in-memory references.
+
+  test("pageRankInt: nine rounds, past the round-8 freeze, match the reference") {
     val edges = (1L to 40L).map(i => (i, i * 7 % 41 + 1)) ++ Seq((2L, 1L), (17L, 3L))
-    val truth = reference(edges, 9)
-    for (cadence <- Seq(0, 1, 3, 8)) {
-      val got = GraphOps.pageRankInt(edges.toDF("src", "dst"), "src", "dst",
-          iters = 9, freezeEvery = cadence)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      withClue(s"freezeEvery=$cadence: ") { got shouldBe truth }
-    }
+    val got = GraphOps.pageRankInt(edges.toDF("src", "dst"), "src", "dst", iters = 9)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    got shouldBe reference(edges, 9)
   }
 
-  test("pageRankWeightedInt: freezeEvery cadence never changes values") {
-    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (2L, 1L, 5L), (4L, 1L, 1L))
-      .toDF("src", "dst", "w")
-    val truth = GraphOps.pageRankWeightedInt(edges, "src", "dst", "w",
-        iters = 7, freezeEvery = 0)
+  /** In-memory weighted reference: duplicate (src, dst) rows sum into
+    * one edge; `c(u→v) = rank(u) * w div Σ_out w(u,·)`. */
+  private def weightedReference(edges: Seq[(Long, Long, Long)], iters: Int,
+                                scale: Long = 1000000L): Map[Long, Long] = {
+    val e = edges.groupBy(x => (x._1, x._2)).map { case (k, ws) => k -> ws.map(_._3).sum }.toSeq
+    val outw = e.groupBy(_._1._1).map { case (s, es) => s -> es.map(_._2).sum }
+    val nodes = e.flatMap { case ((s, d), _) => Seq(s, d) }.distinct
+    var rank = nodes.map(_ -> scale).toMap
+    for (_ <- 1 to iters) {
+      val in = e.groupBy(_._1._2).map { case (d, es) =>
+        d -> es.map { case ((s, _), w) => rank(s) * w / outw(s) }.sum
+      }
+      rank = nodes.map(n => n -> (scale * 15 / 100 + 85 * in.getOrElse(n, 0L) / 100)).toMap
+    }
+    rank
+  }
+
+  test("pageRankWeightedInt: nine rounds match the in-memory weighted reference") {
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 1L, 2L), (2L, 1L, 5L), (4L, 1L, 1L),
+      (3L, 1L, 4L), (5L, 4L, 2L))
+    val got = GraphOps.pageRankWeightedInt(edges.toDF("src", "dst", "w"), "src", "dst", "w",
+        iters = 9)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    for (cadence <- Seq(1, 2, 8)) {
-      val got = GraphOps.pageRankWeightedInt(edges, "src", "dst", "w",
-          iters = 7, freezeEvery = cadence)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      withClue(s"freezeEvery=$cadence: ") { got shouldBe truth }
+    got shouldBe weightedReference(edges, 9)
+  }
+
+  /** In-memory label propagation: each round every node takes the
+    * minimum label of its closed neighborhood on the symmetric graph. */
+  private def labelReference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val sym = (edges ++ edges.map(_.swap)).filter(e => e._1 != e._2).distinct
+    val nbrs = sym.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    var lab = nbrs.keys.map(n => n -> n).toMap
+    for (_ <- 1 to iters)
+      lab = lab.map { case (n, l) => n -> (l +: nbrs(n).map(lab)).min }
+    lab
+  }
+
+  test("minLabelPropagate: a 14-hop chain converges across the fixed freezes") {
+    val chain = (20L until 34L).map(i => (i + 1, i)) // 15 nodes, minimum at one end
+    val g = chain ++ Seq((3L, 2L), (2L, 1L))
+    for (iters <- Seq(7, 14)) withClue(s"$iters rounds: ") {
+      labels(g, iters) shouldBe labelReference(g, iters)
+    }
+    // 14 rounds reach the chain's diameter: every node carries its
+    // component's minimum
+    labels(g, 14) shouldBe
+      ((1L to 3L).map(_ -> 1L) ++ (20L to 34L).map(_ -> 20L)).toMap
+  }
+
+  test("ssspInt: nine rounds, past the round-8 freeze, match an in-memory Bellman-Ford") {
+    // a 12-edge chain of unit-cost edges plus costlier shortcuts: the
+    // cheapest path to the far end needs every chain edge
+    val wedges = (0L until 12L).map(i => (i, i + 1, 1L)) ++
+      Seq((0L, 6L, 9L), (2L, 11L, 12L), (4L, 12L, 20L))
+    def bellmanFord(rounds: Int): Map[Long, Long] = {
+      var dist = Map(0L -> 0L)
+      for (_ <- 1 to rounds) {
+        val cand = wedges.collect { case (s, d, w) if dist.contains(s) => d -> (dist(s) + w) }
+        dist = (dist.toSeq ++ cand).groupBy(_._1).map { case (n, ds) => n -> ds.map(_._2).min }
+      }
+      dist
+    }
+    for (rounds <- Seq(9, 12)) withClue(s"$rounds rounds: ") {
+      GraphOps.ssspInt(wedges.toDF("src", "dst", "w"), "src", "dst", "w",
+          Seq(0L).toDF("seed"), "seed", rounds)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe bellmanFord(rounds)
     }
   }
 
@@ -357,15 +406,20 @@ class GraphOpsSpec extends SparkSpec {
     ex.getMessage should include("negative edge weight")
   }
 
-  test("bfsHops matches the in-memory reference on a dense random graph, any cadence") {
+  test("bfsHops matches the in-memory reference on a dense random graph") {
     val rnd = new scala.util.Random(7)
     val edges = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(e => e._1 != e._2)
     val seeds = Seq(0L, 7L)
-    val want = bfs(edges, seeds, 4)
-    runBfs(edges, seeds, 4) shouldBe want
-    GraphOps.bfsHops(edges.toDF("src", "dst"), "src", "dst",
-        seeds.toDF("seed"), "seed", 4, freezeEvery = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe want
+    runBfs(edges, seeds, 4) shouldBe bfs(edges, seeds, 4)
+  }
+
+  test("bfsHops: a 12-hop chain matches the reference past the hop-8 freeze") {
+    val chain = (1L to 12L).map(i => (i - 1, i))
+    val branches = Seq((3L, 100L), (100L, 101L), (9L, 102L), (102L, 103L), (11L, 2L))
+    val edges = chain ++ branches
+    for (maxHops <- Seq(9, 13)) withClue(s"maxHops=$maxHops: ") {
+      runBfs(edges, Seq(0L), maxHops) shouldBe bfs(edges, Seq(0L), maxHops)
+    }
   }
 }

@@ -459,25 +459,38 @@ class TextOpsSpec extends SparkSpec {
     sparkOrder shouldBe Seq(z, f)
   }
 
-  test("bpeTrain runs a fixed number of Spark jobs, whatever nMerges is") {
-    val corpus = Seq(
-      (0L, "low lower lowest slow slower slowest"),
-      (1L, "new newer newest renew renewed wide wider widest")).toDF("doc_id", "text")
+  /** `f`'s result and the Spark jobs it ran, counted by a listener
+    * after the listener bus is drained. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
     val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusSync.drain(sc) // earlier tests' jobs stay out
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusSync.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private val bpeCorpus = Seq(
+    (0L, "low lower lowest slow slower slowest"),
+    (1L, "new newer newest renew renewed wide wider widest"))
+
+  test("bpeTrain runs a fixed number of Spark jobs, whatever nMerges is") {
+    val corpus = bpeCorpus.toDF("doc_id", "text")
     def jobsFor(nMerges: Int): (Int, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      org.apache.spark.ListenerBusSync.drain(sc) // earlier tests' jobs stay out
-      sc.addSparkListener(listener)
-      val n = try {
-        val learned = TextOps.bpeTrain(corpus, "doc_id", "text", nMerges).collect().length
-        org.apache.spark.ListenerBusSync.drain(sc)
-        learned
-      } finally sc.removeSparkListener(listener)
-      (jobs.get, n)
+      val (merges, buildJobs) = jobsDuring(TextOps.bpeTrain(corpus, "doc_id", "text", nMerges))
+      // the merges come back in round order, and collecting them runs
+      // no job beyond bpeTrain's own
+      val (rows, collectJobs) = jobsDuring(merges.collect())
+      collectJobs shouldBe 0
+      rows.map(_.getLong(0)).toSeq shouldBe (1L to rows.length.toLong)
+      (buildJobs, rows.length)
     }
     val (shallowJobs, shallowMerges) = jobsFor(2)
     val (deepJobs, deepMerges) = jobsFor(40)
@@ -485,6 +498,19 @@ class TextOpsSpec extends SparkSpec {
     deepMerges should be > 20 // the deep call really runs many rounds
     deepJobs shouldBe shallowJobs
     shallowJobs should (be >= 1 and be <= 2)
+  }
+
+  test("x4_bpe_train queries return rounds in order with no job past bpeTrain's own") {
+    val dir = java.nio.file.Files.createTempDirectory("bpe-train-query").toString
+    bpeCorpus.map { case (id, t) => (id.toInt, t, "en", "web", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    for (q <- Seq("x4_bpe_train", "x4_bpe_train_sampled")) withClue(s"$q: ") {
+      val (df, _) = jobsDuring(SparkEntry.queries(q)(spark, dir))
+      val (rows, collectJobs) = jobsDuring(df.collect())
+      collectJobs shouldBe 0
+      rows.map(_.getLong(0)).toSeq shouldBe (1L to 4L)
+    }
   }
 
   test("bigramSurprisal interpolates bigram and unigram exactly; first token is unigram-only") {

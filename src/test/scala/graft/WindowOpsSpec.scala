@@ -114,12 +114,4 @@ class WindowOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     got shouldBe direct
   }
-
-  test("prefixMaxScalable refuses a lazy materializer") {
-    import spark.implicits._
-    val df = Seq((1L, 1L)).toDF("id", "v")
-    an[IllegalArgumentException] should be thrownBy
-      WindowOps.prefixMaxScalable(df, col("id"), col("v"), numParts = 4,
-        mat = graft.sources.Materializer.Lazy)
-  }
 }

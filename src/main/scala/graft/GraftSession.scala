@@ -31,14 +31,16 @@ object GraftSession {
     *    yields (TablesSchemaSpec pins all vintages).
     *  - small sorts in one partition: the AQE runtime rule
     *    [[graft.plans.SmallSortOnePartition]] turns a global sort whose
-    *    input — measured from materialized query stages, with no
-    *    `Generate` between them and the sort — is at most
-    *    `spark.sql.adaptive.advisoryPartitionSizeInBytes` into a
-    *    single-partition sort, dropping the range partitioner's
-    *    sampling job (which re-ran the sort's input). It does nothing
-    *    before a stage has run, after an explode, over a join of two
-    *    big stages, or above one advisory partition; it adds no
-    *    setting of its own.
+    *    input — measured from materialized query stages and driver-built
+    *    local relations, with no `Generate` between them and the sort —
+    *    is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    *    into a single-partition sort, dropping the range partitioner's
+    *    sampling job (which re-ran the sort's input). A join whose
+    *    broadcast side has unique keys counts as at most as many rows as
+    *    its other side. It does nothing before a stage has run, after an
+    *    explode, over a join of two big stages that is not broadcast or
+    *    repeats a broadcast key, or above one advisory partition; it
+    *    adds no setting of its own.
     *
     * Its companion at the kernel entries (no session setting either)
     * is [[graft.sources.LayoutOps.spread]]: it round-robins a map-only
@@ -61,8 +63,7 @@ object GraftSession {
     // fit in memory. 8x cores locally; a cluster inherits the same
     // rule via spark-submit conf.
     .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      (parallelism *
-        sys.env.getOrElse("SPARK_GRAFT_AQE_INIT_FACTOR", "8").toInt).toString)
+      (parallelism * 8).toString)
     // AQE sort-merge -> shuffled-hash conversion: OFF by default
     // upstream (threshold 0). Turning it on is runtime-SIZE-GUARDED —
     // the rewrite happens only when every post-shuffle partition of

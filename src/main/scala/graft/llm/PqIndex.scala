@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
+import graft.sources.Tables
+
 /** Generic persisted-index lifecycle: round-trip any index DataFrame
   * through parquet with a `_graft_meta.json` sidecar holding an opaque
   * parameter string plus the corpus row count, and rebuild only when
@@ -259,12 +261,12 @@ private[llm] object IndexStore {
     * and a tombstone table that big is the signal to [[compact]].
     */
   def read(spark: org.apache.spark.sql.SparkSession, indexPath: String): DataFrame = {
-    val df = spark.read.parquet(indexPath)
+    val df = Tables.readParquet(spark, indexPath)
     val tp = tombstonePath(indexPath)
     val fs = fsFor(spark, tp)
     if (!hasTombstones(fs, tp)) df
     else {
-      val ts = spark.read.parquet(tp.toString).distinct()
+      val ts = Tables.readParquet(spark, tp.toString).distinct()
       val tsBytes = fs.listStatus(tp)
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))

@@ -3,11 +3,14 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Repartition, Sort}
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Generate, Join,
+  LocalRelation, LogicalPlan, Project, Repartition, RepartitionOperation, Sort, SubqueryAlias, Window}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, LogicalQueryStage}
+import org.apache.spark.sql.execution.joins.BroadcastKeys
 import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions.{LongDot, PqAdcDot, QuantizeVec, QuantizedDot}
@@ -40,14 +43,17 @@ object FuseQuantizedDot extends Rule[LogicalPlan] {
   * stage's partitions, and one task sorts ≤ one advisory partition.
   *
   * Fires only on evidence: every leaf under the sort must be a
-  * MATERIALIZED query stage, and no `Generate` may sit between them
+  * MATERIALIZED query stage or a driver-built `LocalRelation` (its
+  * exact row count is known), and no `Generate` may sit between them
   * and the sort (an explode's output is not bounded by its input).
-  * The input's size is Spark's estimate over those stages' runtime
-  * sizes, or — where that estimate multiplies a join's sides — the
-  * stages' measured row counts bounded through the plan (`maxRows`)
-  * times the row width, whichever is smaller. A sort over a raw scan,
-  * over an equi-join of two big stages, or over more than one advisory
-  * partition keeps its range exchange.
+  * The input's size is Spark's estimate over those leaves' runtime
+  * sizes, or — where that estimate multiplies a join's sides — a row
+  * bound ([[rowBound]]) times the row width, whichever is smaller. The
+  * row bound sees through a join whose broadcast side measured unique
+  * keys: such a join emits at most one row per row of its other side.
+  * A sort over a raw scan, over an equi-join of two big stages that is
+  * not broadcast or whose broadcast side repeats a key, or over more
+  * than one advisory partition keeps its range exchange.
   */
 object SmallSortOnePartition extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -66,13 +72,47 @@ object SmallSortOnePartition extends Rule[LogicalPlan] {
   private def small(input: LogicalPlan): Boolean =
     input.collectLeaves().forall {
       case q: LogicalQueryStage => q.isMaterialized
+      case _: LocalRelation => true
       case _ => false
     } &&
       !input.exists(_.isInstanceOf[Generate]) && {
-        val byRows = input.maxRows.map(n => BigInt(n) * EstimationUtils.getSizePerRow(input.output))
+        val byRows = rowBound(input).map(n => BigInt(n) * EstimationUtils.getSizePerRow(input.output))
         (input.stats.sizeInBytes +: byRows.toSeq).min <=
           conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
       }
+
+  /** At most how many rows `p` emits: its own `maxRows`, or less where
+    * a join probes a broadcast side with unique keys (then the join
+    * emits at most one row per row of its other side) or a node that
+    * emits no more rows than it reads passes its child's bound through.
+    * The bound is a property of the data, so it holds whichever
+    * physical join runs.
+    */
+  private def rowBound(p: LogicalPlan): Option[Long] = {
+    val derived = p match {
+      case j: Join => j.joinType match {
+        case Inner | LeftOuter if uniqueBroadcast(j.right) => rowBound(j.left)
+        case Inner | RightOuter if uniqueBroadcast(j.left) => rowBound(j.right)
+        case _ => None
+      }
+      // a global aggregate emits one row even over no input
+      case a: Aggregate if a.groupingExpressions.nonEmpty => rowBound(a.child)
+      case _: Project | _: Filter | _: Window | _: Sort | _: Deduplicate |
+           _: SubqueryAlias | _: RepartitionOperation => rowBound(p.children.head)
+      case _ => None
+    }
+    (p.maxRows.toSeq ++ derived).minOption
+  }
+
+  // reading a completed broadcast stage's value runs no job
+  private def uniqueBroadcast(p: LogicalPlan): Boolean = p match {
+    case q: LogicalQueryStage => q.physicalPlan match {
+      case b: BroadcastQueryStageExec if b.isMaterialized =>
+        BroadcastKeys.unique(b.executeBroadcast[Any]().value)
+      case _ => false
+    }
+    case _ => false
+  }
 }
 
 /** Session extension entry point:

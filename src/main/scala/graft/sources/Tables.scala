@@ -1,6 +1,10 @@
 package graft.sources
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Data sources (SURVEY.md §2.1, S1–S6).
   *
@@ -51,9 +55,44 @@ object Tables {
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/${normalizeFormat(name)}"
-    val raw = spark.read.parquet(path)
+    val raw = readParquet(spark, path)
     assertSchema(name, raw.schema)
     if (name == "events") adaptEventTs(raw) else adaptNanosTs(name, raw)
+  }
+
+  /** Every file under a path as (name, length, modification time), and
+    * the session's parquet settings: what an inferred schema depends on. */
+  private type Fingerprint = (Vector[(String, Long, Long)], Map[String, String])
+
+  /** Qualified path → the fingerprint its schema was inferred under, and
+    * that schema. One entry per path: a re-inference replaces it. */
+  private val schemas = TrieMap.empty[String, (Fingerprint, StructType)]
+
+  /** `spark.read.parquet(path)` without a schema job on a repeat read.
+    * Spark infers a parquet schema with a one-task job on every read;
+    * the inferred schema is kept per qualified path with its
+    * [[Fingerprint]] and handed back with `.schema(...)` while the
+    * fingerprint is unchanged. A rewritten, added or removed file
+    * re-infers. A missing path reads as before (Spark's own error).
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) spark.read.parquet(path)
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      val fingerprint: Fingerprint = (files, spark.conf.getAll.filter(_._1.contains("parquet")))
+      val key = fs.makeQualified(p).toString
+      schemas.get(key) match {
+        case Some((`fingerprint`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          schemas.put(key, (fingerprint, df.schema))
+          df
+      }
+    }
   }
 
   // ---------------------------------------------------------------

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -137,6 +138,78 @@ class GraftExtensionsSpec extends SparkSpec {
       .groupBy((col("id") % 11).as("g")).agg(sum(col("id")).as("s"))
       .orderBy(col("g"))
     for (df <- Seq(() => bpeEncode, () => aggSorted)) {
+      val (rewritten, p1) = runFinal(df())
+      val (ranged, p2) = withAdvisory("64")(runFinal(df()))
+      p1 should include("Exchange SinglePartition")
+      p2 should include("rangepartitioning")
+      rewritten shouldBe ranged
+    }
+  }
+
+  /** Samples as j1_perm_gather reads its orders: one parquet file, so
+    * the scan is one task; `sample_id` is unique. */
+  private lazy val samplesDir: String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("gather").toString
+    (1 to 3000).map(i => (s"c${i % 5}", i.toLong, i * 0.5))
+      .toDF("cls", "sample_id", "price").coalesce(1).write.parquet(s"$dir/samples.parquet")
+    dir
+  }
+
+  /** j1_perm_gather's shape: a permutation numbered by a window over the
+    * samples, joined to a broadcast side made from the samples by
+    * `build`, sorted by class and position. */
+  private def gather(build: DataFrame => DataFrame): DataFrame = {
+    val samples = spark.read.parquet(s"$samplesDir/samples.parquet")
+    val perm = samples.select(col("cls"), col("sample_id"),
+      row_number().over(Window.partitionBy(col("cls"))
+        .orderBy(hash(col("sample_id")), col("sample_id"))).as("pos"))
+    perm.join(broadcast(build(samples)), Seq("cls", "sample_id"))
+      .select(col("cls"), col("pos"), col("sample_id"), col("price"))
+      .orderBy(col("cls"), col("pos"))
+  }
+
+  private def grid: DataFrame = SparkEntry.queries("j3_grid")(spark, docsDir)
+
+  test("small sort: a join over a unique-key broadcast side is bounded by its other side") {
+    val (rows, plan) = runFinal(gather(identity))
+    plan should include("Exchange SinglePartition")
+    plan.toLowerCase should not include "rangepartitioning"
+    rows should have size 3000
+  }
+
+  test("small sort: a broadcast side with a repeated key keeps range partitioning") {
+    val (rows, plan) = runFinal(gather(s => s.union(s)))
+    plan should include("BroadcastHashJoin")
+    plan should include("rangepartitioning")
+    rows should have size 6000
+  }
+
+  test("small sort: a nested-loop broadcast keeps range partitioning") {
+    val samples = spark.read.parquet(s"$samplesDir/samples.parquet")
+    val perm = samples.select(col("cls"), col("sample_id"),
+      row_number().over(Window.partitionBy(col("cls")).orderBy(col("sample_id"))).as("pos"))
+    val build = samples.select(col("sample_id").as("b_id"), col("price"))
+    // no equi-join key: the build side broadcasts as a row array
+    val df = perm.join(broadcast(build), col("sample_id") - col("b_id") === 0)
+      .select(col("cls"), col("pos"), col("sample_id"), col("price"))
+      .orderBy(col("cls"), col("pos"))
+    val (rows, plan) = runFinal(df)
+    plan should include("BroadcastNestedLoopJoin")
+    plan should include("rangepartitioning")
+    rows should have size 3000
+  }
+
+  test("small sort: j3_grid over local relations sorts in one partition") {
+    val (rows, plan) = runFinal(grid)
+    plan should include("LocalTableScan")
+    plan should include("Exchange SinglePartition")
+    plan.toLowerCase should not include "rangepartitioning"
+    rows should have size 6
+  }
+
+  test("small sort: the gather join and the grid give the same rows with and without the rewrite") {
+    for (df <- Seq(() => gather(identity), () => grid)) {
       val (rewritten, p1) = runFinal(df())
       val (ranged, p2) = withAdvisory("64")(runFinal(df()))
       p1 should include("Exchange SinglePartition")

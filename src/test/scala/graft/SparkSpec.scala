@@ -23,4 +23,22 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** `f`'s result and the Spark jobs it ran, counted by a listener
+    * after the listener bus is drained. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusSync.drain(sc) // earlier tests' jobs stay out
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusSync.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

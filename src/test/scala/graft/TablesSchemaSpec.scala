@@ -62,4 +62,25 @@ class TablesSchemaSpec extends SparkSpec {
     // integer division to micros: sub-micro digits truncate, rest exact
     df.select(unix_micros(col("ts"))).as[Long].head() shouldBe nanos / 1000L
   }
+
+  test("a repeat load of an unchanged table runs no job; a rewritten table re-infers its schema") {
+    val dir = tmp()
+    val path = s"$dir/region.parquet"
+    Seq((1, "EUROPE")).toDF("r_regionkey", "r_name").write.parquet(path)
+    val first = Tables.load(spark, dir, "region")
+    val (again, jobs) = jobsDuring(Tables.load(spark, dir, "region"))
+    jobs shouldBe 0
+    again.schema shouldBe first.schema
+    again.collect().map(_.getString(1)).toSeq shouldBe Seq("EUROPE")
+    // rewritten with a drifted type: the contract check sees the new schema
+    Seq((1, 2.5)).toDF("r_regionkey", "r_name").write.mode("overwrite").parquet(path)
+    val e = intercept[IllegalStateException](Tables.load(spark, dir, "region"))
+    e.getMessage should include("'r_name'")
+    // and rewritten again with an extra column
+    Seq((2, "ASIA", "x")).toDF("r_regionkey", "r_name", "r_comment")
+      .write.mode("overwrite").parquet(path)
+    val widened = Tables.load(spark, dir, "region")
+    widened.columns.toSeq shouldBe Seq("r_regionkey", "r_name", "r_comment")
+    widened.collect().map(_.getString(1)).toSeq shouldBe Seq("ASIA")
+  }
 }

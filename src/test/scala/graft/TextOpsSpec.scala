@@ -459,24 +459,6 @@ class TextOpsSpec extends SparkSpec {
     sparkOrder shouldBe Seq(z, f)
   }
 
-  /** `f`'s result and the Spark jobs it ran, counted by a listener
-    * after the listener bus is drained. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusSync.drain(sc) // earlier tests' jobs stay out
-    sc.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.ListenerBusSync.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private val bpeCorpus = Seq(
     (0L, "low lower lowest slow slower slowest"),
     (1L, "new newer newest renew renewed wide wider widest"))

@@ -5493,9 +5493,8 @@ object Queries {
     // ---- F: sequential conversion funnel view→click→purchase.
     // Window-free: each step is a scan-filtered pass over events
     // joined to the previous step's per-user first-time state — the
-    // state join broadcasts by default (events never shuffle) and
-    // flips to a keyed shuffle join via broadcastState=false when user
-    // cardinality outgrows the broadcast limit (dfw/FunnelOps).
+    // state side is always broadcast, so events never shuffle
+    // (dfw/FunnelOps).
     // Integer conversion percents. ----
     ("q_funnel",
       (s: SparkSession, dir: String) => {
@@ -5522,8 +5521,8 @@ object Queries {
     // transition carries a CONVERSION WINDOW ("click within 1 day of
     // the view, purchase within 1 day of the click"). Same window-free
     // per-user-state shape as q_funnel; the bound is one extra
-    // scan-side predicate per step, so the plan (and the
-    // broadcastState scale switch) is unchanged (dfw/FunnelOps). ----
+    // scan-side predicate per step, so the plan (broadcast per-user
+    // state) is unchanged (dfw/FunnelOps). ----
     ("q_funnel_windowed",
       (s: SparkSession, dir: String) => {
         FunnelOps.sequentialFunnel(Tables.load(s, dir, "events"),
@@ -5550,8 +5549,8 @@ object Queries {
 
     // ---- F: time-to-convert distribution per funnel transition —
     // the latency stats that price conversion windows (exact integer
-    // microseconds + quantile_cont-matched p50/p90; same per-user
-    // state chain and broadcastState switch as q_funnel)
+    // microseconds + quantile_cont-matched p50/p90; same broadcast
+    // per-user state chain as q_funnel)
     // (dfw/FunnelOps.funnelTransitionStats). ----
     ("q_funnel_latency",
       (s: SparkSession, dir: String) => {

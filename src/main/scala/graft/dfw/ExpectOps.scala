@@ -37,17 +37,16 @@ object ExpectOps {
       sum((col(c).isNotNull && (col(c) < lo || col(c) > hi)).cast("long")))(df)
 
   /** Every non-null child key must exist in the parent (referential
-    * integrity). Left-anti join; `broadcast` the parent side when it
-    * is dimension-sized (the common case — fact-to-dim audits never
-    * shuffle the fact table then).
+    * integrity). Left-anti join against the broadcast distinct parent
+    * keys: a fact-to-dim audit never shuffles the fact table. A parent
+    * key set past Spark's broadcast limit fails with Spark's own
+    * broadcast-size error.
     */
   def expectRefIntegrity(child: DataFrame, childKey: String,
-                         parent: DataFrame, parentKey: String,
-                         broadcastParent: Boolean = true): DataFrame = {
+                         parent: DataFrame, parentKey: String): DataFrame = {
     val p = parent.select(col(parentKey).as("__pk")).distinct()
     val orphans = child.filter(col(childKey).isNotNull)
-      .join(if (broadcastParent) broadcast(p) else p,
-        col(childKey) === col("__pk"), "left_anti")
+      .join(broadcast(p), col(childKey) === col("__pk"), "left_anti")
     val n = child.agg(count(col(childKey)).as("n")).select(col("n"))
     val v = orphans.agg(count(lit(1)).as("v")).select(col("v"))
     broadcast(n).crossJoin(broadcast(v))

@@ -16,14 +16,11 @@ import org.apache.spark.sql.functions._
   * filtered passes over events (type predicates push to the parquet
   * scan) with only user-cardinality state ever crossing the network.
   *
-  * Join strategy for the per-user state is a PARAMETER, not a forced
-  * hint: `broadcastState = true` (the local/default posture) ships the
-  * surviving-user table to every executor so events never shuffle;
-  * at 100 TB user cardinality is unbounded (10⁸–10⁹ users ≫ the
-  * broadcast limit), so set it FALSE and each step becomes a keyed
-  * shuffle join — the shuffled volume is the scan-FILTERED step events
-  * (one event type) plus the user-state table, both ≪ the raw log.
-  * Mirrors [[graft.llm.GraphOps.pageRankInt]]'s `broadcastRanks`.
+  * The per-user state is always broadcast into each step's join, so
+  * the events never shuffle — the same replicated-state posture as
+  * [[graft.llm.GraphOps.pageRankInt]]'s rank table. A user table past
+  * Spark's broadcast limit fails with Spark's own broadcast-size
+  * error.
   */
 object FunnelOps {
 
@@ -36,22 +33,17 @@ object FunnelOps {
     *        `withinSeconds(k)` seconds of the user's step-k time
     *        ("click ≤ 7 days after view" = `Seq(604800L, …)`). Empty
     *        (default) = unbounded, the classic funnel.
-    * @param broadcastState broadcast the per-user surviving state into
-    *        each step's join (true: events never shuffle; false: keyed
-    *        shuffle join for past-broadcast user cardinality)
     * @return (step INT, stage STRING, n_users LONG, conv_pct LONG) —
     *         conv_pct = integer percent of step-1 users (exact in any
     *         summation order)
     */
   def sequentialFunnel(events: DataFrame, userCol: String, typeCol: String,
                        tsCol: String, steps: Seq[String],
-                       withinSeconds: Seq[Long] = Nil,
-                       broadcastState: Boolean = true): DataFrame = {
+                       withinSeconds: Seq[Long] = Nil): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     require(withinSeconds.isEmpty || withinSeconds.size == steps.size - 1,
       s"withinSeconds needs one entry per transition (${steps.size - 1}), " +
         s"got ${withinSeconds.size}")
-    def hint(df: DataFrame) = if (broadcastState) broadcast(df) else df
     val bounds: Seq[Option[Long]] =
       if (withinSeconds.isEmpty) Seq.fill(steps.size - 1)(None)
       else withinSeconds.map(Some(_))
@@ -64,7 +56,7 @@ object FunnelOps {
         case None    => lit(true)
       }
       cur = events.filter(col(typeCol) === st)
-        .join(hint(cur.withColumnRenamed("__t", "__prev")), userCol)
+        .join(broadcast(cur.withColumnRenamed("__t", "__prev")), userCol)
         .filter(col(tsCol) > col("__prev") && within)
         .groupBy(col(userCol)).agg(min(col(tsCol)).as("__t"))
       reached += st -> cur
@@ -74,7 +66,7 @@ object FunnelOps {
         .select(lit(i + 1).as("step"), lit(st).as("stage"), col("n_users"))
     }.reduce(_ unionByName _)
     val first = counts.filter(col("step") === 1).select(col("n_users").as("__n0"))
-    // one-row side: always broadcast regardless of broadcastState
+    // the one-row step-1 count, broadcast to every step row
     counts.crossJoin(broadcast(first))
       .select(col("step"), col("stage"), col("n_users"),
         // guarded: a funnel whose first step has no actors reports 0%
@@ -92,11 +84,11 @@ object FunnelOps {
     * this distribution in practice).
     *
     * Same per-user-state chain as [[sequentialFunnel]] (each stage one
-    * scan-filtered pass + min-aggregate; `broadcastState` picks the
-    * state-join strategy); consecutive stages join per user and one
-    * hash aggregate per transition emits exact integer seconds stats
-    * plus interpolated p50/p90 (`percentile` — IEEE-matched to
-    * DuckDB's quantile_cont, pinned by the q_percentiles family).
+    * scan-filtered pass + min-aggregate, per-user state broadcast);
+    * consecutive stages join per user and one hash aggregate per
+    * transition emits exact integer seconds stats plus interpolated
+    * p50/p90 (`percentile` — IEEE-matched to DuckDB's quantile_cont,
+    * pinned by the q_percentiles family).
     *
     * @return one row per transition: (step INT — 1-based transition,
     *         from_stage, to_stage, n_users LONG, min_us/max_us/sum_us
@@ -113,13 +105,11 @@ object FunnelOps {
     */
   def funnelTransitionStats(events: DataFrame, userCol: String, typeCol: String,
                             tsCol: String, steps: Seq[String],
-                            withinSeconds: Seq[Long] = Nil,
-                            broadcastState: Boolean = true): DataFrame = {
+                            withinSeconds: Seq[Long] = Nil): DataFrame = {
     require(steps.size >= 2, "transition stats need at least two steps")
     require(withinSeconds.isEmpty || withinSeconds.size == steps.size - 1,
       s"withinSeconds needs one entry per transition (${steps.size - 1}), " +
         s"got ${withinSeconds.size}")
-    def hint(df: DataFrame) = if (broadcastState) broadcast(df) else df
     val bounds: Seq[Option[Long]] =
       if (withinSeconds.isEmpty) Seq.fill(steps.size - 1)(None)
       else withinSeconds.map(Some(_))
@@ -132,7 +122,7 @@ object FunnelOps {
         case None    => lit(true)
       }
       cur = events.filter(col(typeCol) === st)
-        .join(hint(cur.withColumnRenamed("__t", "__prev")), userCol)
+        .join(broadcast(cur.withColumnRenamed("__t", "__prev")), userCol)
         .filter(col(tsCol) > col("__prev") && within)
         .groupBy(col(userCol)).agg(min(col(tsCol)).as("__t"))
       stages += cur
@@ -205,21 +195,18 @@ object FunnelOps {
     *
     * Shape: activity collapses to distinct (day, user) pairs first
     * (user-day cardinality, ≪ events), the per-user first-seen table
-    * joins back (`broadcastState` picks the strategy — per-user state
-    * is unbounded at scale, see the object doc), and one hash
+    * joins back as a broadcast (see the object doc), and one hash
     * aggregate per (cohort, offset) finishes — no window, no self-join
-    * over events. The cohort-SIZE side stays a broadcast
-    * unconditionally: its cardinality is distinct DAYS, bounded by the
-    * calendar, not by users. Integer percents (`div`); a cohort's own
-    * day 0 is always 100.
+    * over events. The cohort-SIZE side is broadcast too: its
+    * cardinality is distinct DAYS, bounded by the calendar, not by
+    * users. Integer percents (`div`); a cohort's own day 0 is always
+    * 100.
     */
-  def cohortRetention(events: DataFrame, userCol: String, tsCol: String,
-                      broadcastState: Boolean = true): DataFrame = {
-    def hint(df: DataFrame) = if (broadcastState) broadcast(df) else df
+  def cohortRetention(events: DataFrame, userCol: String, tsCol: String): DataFrame = {
     val act = events.select(to_date(col(tsCol)).as("day"), col(userCol).as("__u")).distinct()
     val first = act.groupBy(col("__u")).agg(min(col("day")).as("cohort_day"))
     val sizes = first.groupBy(col("cohort_day")).agg(count(lit(1)).as("cohort_n"))
-    act.join(hint(first), "__u")
+    act.join(broadcast(first), "__u")
       .select(col("cohort_day"),
         datediff(col("day"), col("cohort_day")).as("day_offset"))
       .groupBy(col("cohort_day"), col("day_offset"))

@@ -166,7 +166,8 @@ object SplitOps {
     * locally, total executor cores on a cluster), NOT
     * `conf.numShufflePartitions` — with AQE coalescing on, the latter
     * silently resolves to `initialPartitionNum` (8× cores), which the
-    * r19 StatsGuardProbe measured as an 8×-inflated FLOOR: every
+    * r19 stats-guard probe measured as an 8×-inflated FLOOR (findings
+    * in OPTIMIZATION_r19.md §6): every
     * small-input rank paid a 256-partition range exchange (2.0 s vs
     * 1.1 s per rank at sf0.1) while the ceiling ballooned to 8192 and
     * let a garbage post-join size estimate (size-only stats MULTIPLY
@@ -176,7 +177,8 @@ object SplitOps {
     * faster than 64; the decade spill class stays partitioned), and
     * garbage estimates cap at 32×cores ~ms-scheduling tasks.
     *
-    * KNOWN LIMIT (r19 StatsGuardProbe `exploded*` scenarios): an
+    * KNOWN LIMIT (the r19 probe's `exploded*` scenarios,
+    * OPTIMIZATION_r19.md): an
     * expansion ABOVE the scan (explode/Generate) keeps ~child-size
     * stats, so the estimate undershoots by the expansion factor and a
     * decade-scale exploded rank lands on the floor and spills

@@ -88,20 +88,6 @@ object TransformOps {
       .drop("__means")
   }
 
-  /** Per-group z-score standardization from EXACT moment sums — the
-    * variance-scaling companion of the T2 centering family. The
-    * built-in `stddev` accumulates in shuffle order (last-ulp
-    * nondeterminism); here the inputs are integer-valued (quantize
-    * fractional columns upstream, e.g. price → cents), so n, Σx, Σx²
-    * are exact integers under ANY partitioning and
-    * μ = Σx/n, σ = sqrt((Σx² − Σx²/n)/(n−1)) is one fixed IEEE op
-    * sequence — the z-scores are engine-exact before their display
-    * rounding. Group moments ride back via broadcast; the data side
-    * never join-shuffles.
-    *
-    * @param cols integer-valued columns to standardize; emits
-    *             `<col>_z` rounded to 6
-    */
   /** Weight-of-evidence (WoE) encoding + information value — the
     * classic supervised categorical encoding (credit-scoring
     * heritage, still the standard "is this feature worth keeping"
@@ -143,6 +129,20 @@ object TransformOps {
       .orderBy(col("cat"))
   }
 
+  /** Per-group z-score standardization from EXACT moment sums — the
+    * variance-scaling companion of the T2 centering family. The
+    * built-in `stddev` accumulates in shuffle order (last-ulp
+    * nondeterminism); here the inputs are integer-valued (quantize
+    * fractional columns upstream, e.g. price → cents), so n, Σx, Σx²
+    * are exact integers under ANY partitioning and
+    * μ = Σx/n, σ = sqrt((Σx² − Σx²/n)/(n−1)) is one fixed IEEE op
+    * sequence — the z-scores are engine-exact before their display
+    * rounding. Group moments ride back via broadcast; the data side
+    * never join-shuffles.
+    *
+    * @param cols integer-valued columns to standardize; emits
+    *             `<col>_z` rounded to 6
+    */
   def standardizeByGroup(df: DataFrame, groupCols: Seq[String],
                          cols: Seq[String]): DataFrame = {
     val aggs = cols.flatMap { c =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.LayoutOps
+import graft.sources.Materializer.freeze
 
 /** Deduplication operators for document corpora
   * (SURVEY.md §2.8 X1/X2).
@@ -451,7 +452,7 @@ object DedupOps {
     // the shingle set feeds three consumers (signatures, sizes, the
     // verify join x2); measured r1: persist() lost to lazy
     // re-derivation; re-measured r3: localCheckpoint
-    val sh = wordShingles(docs, idCol, textCol, shingleW).localCheckpoint()
+    val sh = freeze(wordShingles(docs, idCol, textCol, shingleW))
     minHashLshPairsIndexed(minHashBandedFromShingles(sh, numHashes, bands), sh, num, den)
   }
 
@@ -563,7 +564,7 @@ object DedupOps {
       // discipline documented on IndexStore.resurrectOrFilter)
       val toAppend = IndexStore.resurrectOrFilter(newDocs, idCol, "doc_id",
         Seq(s"$indexPath/shingles", s"$indexPath/banded"))
-      val deltaSh = wordShingles(toAppend, idCol, textCol, shingleW).localCheckpoint()
+      val deltaSh = freeze(wordShingles(toAppend, idCol, textCol, shingleW))
       deltaSh.write.mode("append").parquet(s"$indexPath/shingles")
       IndexStore.stamp(corpusAfterAppend, shParams, s"$indexPath/shingles")
       minHashBandedFromShingles(deltaSh, numHashes, bands)
@@ -776,7 +777,7 @@ object DedupOps {
     * rounds where plain min-label propagation needs L. The driver loop
     * is control flow only; data never leaves executors.
     *
-    * Per-round cost discipline: the edge set is `localCheckpoint`ed
+    * Per-round cost discipline: the edge set is frozen
     * (truncating lineage so round k does not re-resolve rounds 1..k-1),
     * and convergence is ONE tiny aggregate over the checkpointed
     * partitions — a (count, hash-sum) edge-set signature; a fixed point
@@ -813,18 +814,17 @@ object DedupOps {
     // consumers below (nodes twice, edges once) — without this the
     // upstream join re-executes per consumer and dominates the whole
     // clustering (measured 3x the loop cost on x2_dup_clusters)
-    val p0 = pairs.localCheckpoint()
+    val p0 = freeze(pairs)
     val nodes = p0.select(col("doc1").as("doc_id"))
       .union(p0.select(col("doc2").as("doc_id")))
       .distinct()
 
     // directed u > v, self-loops dropped
-    var edges = p0
+    var edges = freeze(p0
       .select(greatest(col("doc1"), col("doc2")).as("u"),
         least(col("doc1"), col("doc2")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
     // order-free edge-set signature: equal sets => equal signature.
     // Used only as a cheap convergence PREFILTER — a signature match is
@@ -883,16 +883,15 @@ object DedupOps {
         .distinct()
       // small-star: smaller neighbors (and u itself) link to min(N<(u))
       val mins2 = large.groupBy("u").agg(min(col("v")).as("m"))
-      val next = large.join(mins2, "u")
+      val next = freeze(large.join(mins2, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins2.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       val nsig = signature(next)
       // both sides are distinct sets and the signatures carry counts,
       // so equal count + empty one-sided difference ⇒ set equality;
-      // both frames are already localCheckpointed, so this reads
+      // both frames are already frozen, so this reads
       // materialized partitions, not recomputed lineage
       converged = nsig == sig && next.exceptAll(edges).isEmpty
       sig = nsig

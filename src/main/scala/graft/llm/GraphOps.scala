@@ -25,11 +25,11 @@ import graft.sources.Materializer.freeze
   *    scale=1e6, and identical on both sides.
   *  - **Ranks stay a (node, rank) table.** Edges are the big side and
   *    are never re-shuffled between rounds once keyed; the rank table
-  *    is |V| rows — when |V| ≪ |E| (every real link graph) Spark
-  *    broadcasts it into the join (plan-asserted), so a round costs
-  *    one scan of the edge list + one aggregate. At 100 TB of edges
-  *    with |V| past broadcast range, the same plan degrades to a
-  *    co-partitioned shuffle join on `src`.
+  *    is |V| rows and every loop broadcasts it into the edge join
+  *    unconditionally (plan-asserted) — GraphX's replicated vertex
+  *    view — so a round costs one scan of the edge list + one
+  *    aggregate. A state side past Spark's broadcast limit fails with
+  *    Spark's own broadcast-size error.
   *
   * Every operator here freezes its static per-round intermediates
   * (edge list + degrees, node set) once through
@@ -60,10 +60,8 @@ object GraphOps {
     */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iters: Int, dampNum: Long = 85L, dampDen: Long = 100L,
-                  scale: Long = 1000000L,
-                  broadcastRanks: Boolean = true): DataFrame = {
+                  scale: Long = 1000000L): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    def hint(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     // Freeze the deduped edge list FIRST: three consumers follow (the
     // degree aggregate, the join probe side, and the node set), and
     // unfrozen each one re-derives the upstream plan — for an edge
@@ -79,8 +77,8 @@ object GraphOps {
     // input (k rounds = k+1 scans of the upstream joins), so both are
     // frozen once. A checkpointed edge table has NO catalyst size stats
     // (Scan ExistingRDD), so the |V|-sized rank/summed sides carry an
-    // explicit broadcast hint (`broadcastRanks`); set it false past
-    // broadcast range and the rounds run as co-partitioned joins.
+    // explicit broadcast hint; without it Spark plans a sort-merge
+    // join and re-shuffles the edge list every round.
     val ed = freeze(e.join(deg, "src"))
     val nodes = freeze(
       e.select(col("src").as("node"))
@@ -90,11 +88,11 @@ object GraphOps {
     var rank = nodes.select(col("node"), lit(scale).as("rank"))
     for (i <- 1 to iters) {
       val contrib = ed
-        .join(hint(rank.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(rank.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"),
           expr("rank div outdeg").as("c"))
       val summed = contrib.groupBy(col("node")).agg(sum(col("c")).as("s"))
-      rank = nodes.join(hint(summed), Seq("node"), "left")
+      rank = nodes.join(broadcast(summed), Seq("node"), "left")
         .select(col("node"),
           (lit(teleport) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
             .as("rank"))
@@ -119,10 +117,8 @@ object GraphOps {
   def pageRankWeightedInt(edges: DataFrame, srcCol: String, dstCol: String,
                           weightCol: String, iters: Int,
                           dampNum: Long = 85L, dampDen: Long = 100L,
-                          scale: Long = 1000000L,
-                          broadcastRanks: Boolean = true): DataFrame = {
+                          scale: Long = 1000000L): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampNum <= dampDen)
-    def hint(df: DataFrame) = if (broadcastRanks) broadcast(df) else df
     // freeze the aggregated edge list first — same three-consumer
     // re-derivation as pageRankInt (see the comment there)
     val e = freeze(
@@ -140,11 +136,11 @@ object GraphOps {
     var rank = nodes.select(col("node"), lit(scale).as("rank"))
     for (i <- 1 to iters) {
       val contrib = ed
-        .join(hint(rank.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(rank.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"),
           expr("(rank * w) div outw").as("c"))
       val summed = contrib.groupBy(col("node")).agg(sum(col("c")).as("s"))
-      rank = nodes.join(hint(summed), Seq("node"), "left")
+      rank = nodes.join(broadcast(summed), Seq("node"), "left")
         .select(col("node"),
           (lit(teleport) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
             .as("rank"))
@@ -169,13 +165,11 @@ object GraphOps {
     * result is bit-identical under any partitioning — same discipline
     * as [[pageRankInt]], same per-round cost shape (one join of the
     * static symmetric edge list against the |V|-row label table +
-    * one min-aggregate; labels broadcast while |V| ≪ |E|).
+    * one min-aggregate; labels broadcast into the edge join).
     */
   def minLabelPropagate(edges: DataFrame, srcCol: String, dstCol: String,
-                        iters: Int,
-                        broadcastLabels: Boolean = true): DataFrame = {
+                        iters: Int): DataFrame = {
     require(iters >= 0)
-    def hint(df: DataFrame) = if (broadcastLabels) broadcast(df) else df
     val raw = edges.select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
     // symmetric edge set, frozen once — every round's neighbor-label
@@ -190,10 +184,10 @@ object GraphOps {
     val nodes = freeze(e.select(col("a").as("node")).distinct())
     var lab = nodes.select(col("node"), col("node").as("label"))
     for (i <- 1 to iters) {
-      val neigh = e.join(hint(lab.withColumnRenamed("node", "b")
+      val neigh = e.join(broadcast(lab.withColumnRenamed("node", "b")
           .withColumnRenamed("label", "nl")), "b")
         .groupBy(col("a").as("node")).agg(min(col("nl")).as("nmin"))
-      lab = lab.join(hint(neigh), Seq("node"), "left")
+      lab = lab.join(broadcast(neigh), Seq("node"), "left")
         .select(col("node"), least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       // each round references `lab` TWICE (as the join's probe side and
       // inside `neigh`), so an unfrozen label table doubles the plan
@@ -342,20 +336,16 @@ object GraphOps {
     * deg·scale and the normalize multiply adds ×scale — exact to
     * deg ≈ 9×10⁶ at scale 10⁶; promote to decimal beyond.)
     *
-    * Scale shape mirrors [[pageRankInt]]: the edge table freezes once,
-    * per-round score tables carry the
-    * `broadcastScores` hint while |V| is broadcastable, flip it false
-    * past that and rounds run as keyed shuffle joins.
+    * Scale shape mirrors [[pageRankInt]]: the edge table freezes once
+    * and the per-round score tables are broadcast into the edge joins.
     *
     * @return one row per node: `node, hub, auth` (both on the scale
     *         grid; a node with no out-edges has hub 0, no in-edges
     *         auth 0), ordered by node
     */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
-              rounds: Int, scale: Long = 1000000L,
-              broadcastScores: Boolean = true): DataFrame = {
+              rounds: Int, scale: Long = 1000000L): DataFrame = {
     require(rounds >= 1 && scale > 0)
-    def hint(df: DataFrame) = if (broadcastScores) broadcast(df) else df
     val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct())
@@ -375,7 +365,7 @@ object GraphOps {
       // max over ≤|V| rows — one-row broadcast; all-zero degenerates
       // to max 1 (scores stay 0)
       val mx = summed.agg(greatest(max(col("s")), lit(1L)).as("mx"))
-      nodes.join(hint(summed), Seq("node"), "left")
+      nodes.join(broadcast(summed), Seq("node"), "left")
         .crossJoin(broadcast(mx))
         .select(col("node"),
           expr(s"(coalesce(s, 0L) * $scale) div mx").as(out))
@@ -384,14 +374,14 @@ object GraphOps {
     var hub = nodes.select(col("node"), lit(scale).as("hub"))
     var auth = nodes.select(col("node"), lit(0L).as("auth"))
     for (_ <- 1 to rounds) {
-      val aSum = e.join(hint(hub.withColumnRenamed("node", "src")), "src")
+      val aSum = e.join(broadcast(hub.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("s"))
       auth = normalized(aSum, "auth")
-      val hSum = e.join(hint(auth.withColumnRenamed("node", "dst")), "dst")
+      val hSum = e.join(broadcast(auth.withColumnRenamed("node", "dst")), "dst")
         .groupBy(col("src").as("node")).agg(sum(col("auth")).as("s"))
       hub = normalized(hSum, "hub")
     }
-    hub.join(hint(auth), "node").select(col("node"), col("hub"), col("auth"))
+    hub.join(broadcast(auth), "node").select(col("node"), col("hub"), col("auth"))
       .orderBy(col("node"))
   }
 
@@ -474,10 +464,8 @@ object GraphOps {
     *         `maxHops` of any seed
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-              seeds: DataFrame, seedCol: String, maxHops: Int,
-              broadcastFrontier: Boolean = true): DataFrame = {
+              seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0)
-    def hint(df: DataFrame) = if (broadcastFrontier) broadcast(df) else df
     val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct())
@@ -486,7 +474,7 @@ object GraphOps {
     var frontier = dist.select(col("node"))
     for (k <- 1 to maxHops) {
       val nxt = freeze(
-        e.join(hint(frontier.withColumnRenamed("node", "src")), "src")
+        e.join(broadcast(frontier.withColumnRenamed("node", "src")), "src")
           .select(col("dst").as("node")).distinct()
           .join(dist.select(col("node")), Seq("node"), "left_anti"))
       dist = dist.union(nxt.select(col("node"), lit(k.toLong).as("dist")))
@@ -509,8 +497,8 @@ object GraphOps {
     *
     * Parallel (src, dst) edges pre-collapse to their minimum weight.
     * Per round: one keyed join (edges ⋈ dist) + one min-aggregate;
-    * the distance table carries the [[pageRankInt]] broadcast hint
-    * while it fits, and freezes every 8 rounds.
+    * the distance table is broadcast into the join as in
+    * [[pageRankInt]], and freezes every 8 rounds.
     * Negative weights are rejected — bounded-round Bellman-Ford would
     * be well-defined, but no corpus-curation cost is negative and
     * rejecting them keeps "dist never increases across rounds" as an
@@ -520,10 +508,8 @@ object GraphOps {
     *         any seed within `rounds` edges (seeds at 0)
     */
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String, wCol: String,
-              seeds: DataFrame, seedCol: String, rounds: Int,
-              broadcastDist: Boolean = true): DataFrame = {
+              seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 0)
-    def hint(df: DataFrame) = if (broadcastDist) broadcast(df) else df
     val e = freeze(
       edges.select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"),
@@ -535,7 +521,7 @@ object GraphOps {
       .select(col("node"), lit(0L).as("dist"))
     for (k <- 1 to rounds) {
       val cand = e
-        .join(hint(dist.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(dist.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       dist = dist.union(cand).groupBy(col("node")).agg(min(col("dist")).as("dist"))
       if (k % FreezeEvery == 0 && k < rounds) dist = freeze(dist)

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 import graft.sources.Tables
+import graft.sources.Materializer.freeze
 
 /** Generic persisted-index lifecycle: round-trip any index DataFrame
   * through parquet with a `_graft_meta.json` sidecar holding an opaque
@@ -366,9 +367,8 @@ private[llm] object IndexStore {
     else {
       // materialize the tombstoned-id set BEFORE pruning rewrites the
       // tables the lazy scans would otherwise re-read post-swap
-      val ts = tombstoned.reduce(_ union _).distinct()
-        .select(org.apache.spark.sql.functions.col(storedIdCol).as(deltaIdCol))
-        .localCheckpoint()
+      val ts = freeze(tombstoned.reduce(_ union _).distinct()
+        .select(org.apache.spark.sql.functions.col(storedIdCol).as(deltaIdCol)))
       // the id↔content discipline is documented but can't be enforced
       // here (content columns are family-specific); the least we owe
       // the caller is a SIGNAL — a silent drop of changed content

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.Materializer.freeze
 
 /** Similarity search over embedding columns (SURVEY.md §2.8 X3).
   *
@@ -85,15 +86,15 @@ object SimilarityOps {
         cents.withColumn("__centn2",
           VectorFunctions.longDot(col("__centq"), col("__centq"))),
         keep = 1)
-      cents = assigned
+      // tiny table; the freeze truncates the per-iter lineage
+      cents = freeze(assigned
         .select(col("centroid_id"), posexplode(col("__qv")).as(Seq("p", "v")))
         .groupBy("centroid_id", "p").agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
         .withColumn("m", expr("s div n"))
         .groupBy("centroid_id")
         .agg(array_sort(collect_list(struct(col("p"), col("m")))).as("__ms"))
         .withColumn("__centq", expr("transform(__ms, x -> x.m)"))
-        .select(col("centroid_id"), col("__centq"))
-        .localCheckpoint() // tiny table; truncates the per-iter lineage
+        .select(col("centroid_id"), col("__centq")))
     }
     cents
   }
@@ -1112,7 +1113,8 @@ object SimilarityOps {
     for (_ <- 1 to kmeansIters) {
       val assigned = assignCodes(sv,
         cb.withColumn("__cwn2", VectorFunctions.longDot(col("__cw"), col("__cw"))))
-      cb = assigned
+      // tiny table; the freeze truncates per-iter lineage
+      cb = freeze(assigned
         .select(col("m"), col("code"), posexplode(col("__sq")).as(Seq("p", "v")))
         .groupBy("m", "code", "p").agg(expr("sum(v) div count(1)").as("mv"))
         .groupBy("m", "code")
@@ -1121,8 +1123,7 @@ object SimilarityOps {
         // survivors re-densify so codes stay positional for ADC
         .withColumn("code",
           row_number().over(Window.partitionBy(col("m")).orderBy(col("code"))).cast("long") - 1L)
-        .select(col("m"), col("code"), col("__cw"))
-        .localCheckpoint() // tiny table; truncates per-iter lineage
+        .select(col("m"), col("code"), col("__cw")))
     }
     cb.withColumn("__cwn2", VectorFunctions.longDot(col("__cw"), col("__cw")))
   }

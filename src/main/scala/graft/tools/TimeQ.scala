@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.GraftSession.tuned(
-        SparkSession.builder().master("local[32]")
-          .config("spark.ui.enabled", "false"), 32)
+        SparkSession.builder().master(s"local[$cpus]")
+          .config("spark.ui.enabled", "false"), cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val name = args(0); val dir = args(1)

@@ -52,24 +52,6 @@ class FunnelOpsSpec extends SparkSpec {
     plan should include("BroadcastHashJoin")
   }
 
-  test("sequentialFunnel: broadcastState=false plan is a keyed shuffle join, same result") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      // threshold off so static planning can't silently re-broadcast the
-      // tiny test relations: what's left is exactly the scale posture
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = FunnelOps.sequentialFunnel(events, "user_id", "event_type", "ts",
-        Seq("view", "click", "purchase"), broadcastState = false)
-      val plan = df.queryExecution.executedPlan.toString
-      // state joins shuffle by user key; the only broadcast left is the
-      // explicit one-row conv_pct denominator (nested-loop, not hash)
-      plan should not include "BroadcastHashJoin"
-      (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")) shouldBe true
-      df.collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3))) shouldBe
-        Array((1, 4L, 100L), (2, 3L, 75L), (3, 2L, 50L))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("sequentialFunnel: conversion windows bound each transition") {
     // user 1 converts within minutes; user 6 clicks 2h after view and
     // purchases 10m after the click — a 1h click-window drops user 6 at
@@ -141,32 +123,6 @@ class FunnelOpsSpec extends SparkSpec {
       ("2024-02-01", 2, 2L, 100L),
       ("2024-02-02", 0, 1L, 100L),
       ("2024-02-02", 1, 1L, 100L))
-  }
-
-  test("cohortRetention: broadcastState=false shuffles first-seen, same matrix") {
-    def d(day: Int, m: Int) = Timestamp.valueOf(f"2024-02-$day%02d 0$m:00:00")
-    val ev = Seq(
-      (10L, d(1, 1)), (10L, d(1, 2)), (11L, d(1, 1)),
-      (10L, d(2, 1)), (12L, d(2, 1)),
-      (10L, d(3, 1)), (11L, d(3, 1)), (12L, d(3, 2))
-    ).toDF("user_id", "ts")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = FunnelOps.cohortRetention(ev, "user_id", "ts", broadcastState = false)
-      val plan = df.queryExecution.executedPlan.toString
-      // ONE broadcast hash join must remain: the calendar-bounded cohort
-      // sizes (explicitly hinted); the per-USER first-seen join shuffles
-      "BroadcastHashJoin".r.findAllIn(plan).size shouldBe 1
-      (plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")) shouldBe true
-      df.collect().map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2), r.getLong(3))) shouldBe
-        Array(
-          ("2024-02-01", 0, 2L, 100L),
-          ("2024-02-01", 1, 1L, 50L),
-          ("2024-02-01", 2, 2L, 100L),
-          ("2024-02-02", 0, 1L, 100L),
-          ("2024-02-02", 1, 1L, 100L))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("lastTouchAttribution: most recent preceding touch wins; no touch → unattributed") {

@@ -395,7 +395,7 @@ class PlanSpec extends SparkSpec {
     plan should include("EqualTo(event_type,click)")
     plan should include("EqualTo(event_type,purchase)")
     plan should not include "Window"
-    plan should not include "SortMergeJoin" // default broadcastState posture
+    plan should not include "SortMergeJoin" // per-user state is broadcast
   }
 
   test("q_funnel_windowed: the conversion bound adds no shuffle or window to the funnel plan") {

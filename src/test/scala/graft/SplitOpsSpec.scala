@@ -109,7 +109,7 @@ class SplitOpsSpec extends SparkSpec {
   test("adaptiveRangeParts: clamp band holds for honest and garbage estimates (r19)") {
     val cores = spark.sparkContext.defaultParallelism
     // tiny honest input -> FLOOR = cores, never the AQE-inflated
-    // initialPartitionNum (the r19 StatsGuardProbe 256-floor defect)
+    // initialPartitionNum (the r19 256-floor defect, OPTIMIZATION_r19.md §6)
     val tiny = (0 until 100).map(i => (s"c${i % 3}", i.toLong)).toDF("cls", "sample_id")
     SplitOps.adaptiveRangeParts(tiny) shouldBe cores
     // garbage-HIGH estimate: size-only stats MULTIPLY inner-join sides,

@@ -659,8 +659,7 @@ object Queries {
   // w1_train_test below exercises the plain single-window op directly.
   private def ranked(s: SparkSession, dir: String): DataFrame =
     SplitOps.rankByPermutationScalable(featureTable(s, dir), Seq("cls"),
-      Seq(col("perm"), col("sample_id"), col("l_quantity"), col("l_extendedprice")),
-      numParts = 0)
+      Seq(col("perm"), col("sample_id"), col("l_quantity"), col("l_extendedprice")))
 
   private val rSql =
     s"""WITH f AS ($fSql),
@@ -828,7 +827,7 @@ object Queries {
           .select(col("o_orderpriority").as("prio"), col("o_orderkey"), col("o_totalprice"))
         WindowOps.orderedAnalyticsScalable(base, Seq("prio"),
             Seq(col("o_totalprice"), col("o_orderkey")), "o_totalprice",
-            nTiles = 4, numParts = 0)
+            nTiles = 4)
           .select(col("prio"), col("o_orderkey"), col("o_totalprice"),
             col("prev").as("prev_price"), col("next").as("next_price"),
             // ORDER BY (o_totalprice, o_orderkey) is a total order, so
@@ -1071,8 +1070,7 @@ object Queries {
     ("w1_split_scalable",
       (s: SparkSession, dir: String) => {
         val r = SplitOps.rankByPermutationScalable(featureTable(s, dir), Seq("cls"),
-          Seq(col("perm"), col("sample_id"), col("l_quantity"), col("l_extendedprice")),
-          numParts = 0)
+          Seq(col("perm"), col("sample_id"), col("l_quantity"), col("l_extendedprice")))
         SplitOps.trainTestSplit(r, SplitOps.Frac(0.5), CV)
           .select(col("cls"), col("sample_id"), col("role"))
           .orderBy(col("cls"), col("sample_id"), col("role"))
@@ -1215,7 +1213,7 @@ object Queries {
           .withColumn("descriptor", lit("default"))
           .withColumn("features",
             TransformOps.extendBias(array(col("l_quantity"), col("l_extendedprice"))))
-        TransformOps.centerFeatureArrayFast(split, Seq("descriptor"), "role", "features")
+        TransformOps.centerFeatureArray(split, Seq("descriptor"), "role", "features")
           .select(col("cls"), col("sample_id"), col("role"),
             round(element_at(col("features_centered"), 1), 6).as("f1_c"),
             round(element_at(col("features_centered"), 2), 4).as("f2_c"),
@@ -1260,12 +1258,11 @@ object Queries {
         // key total
         val rankedD = SplitOps.rankByPermutationScalable(both, Seq("descriptor", "cls"),
           Seq(col("perm"), col("sample_id"), element_at(col("features"), 1),
-            coalesce(try_element_at(col("features"), lit(2)), lit(0.0))),
-          numParts = 0)
+            coalesce(try_element_at(col("features"), lit(2)), lit(0.0))))
         val split = SplitOps.trainTestSplit(rankedD, SplitOps.Frac(0.5), CV)
         // reference semantics (preprocess.py:76-79): one mean per
         // DESCRIPTOR over the concatenated train matrix of all classes
-        TransformOps.centerFeatureArrayFast(split, Seq("descriptor"), "role", "features")
+        TransformOps.centerFeatureArray(split, Seq("descriptor"), "role", "features")
           .select(col("descriptor"), col("cls"), col("sample_id"), col("role"),
             round(element_at(col("features_centered"), 1), 6).as("f1_c"),
             round(try_element_at(col("features_centered"), lit(2)), 4).as("f2_c"))
@@ -2392,7 +2389,7 @@ object Queries {
     // engine. The constant `corpus` key must be NON-FOLDABLE
     // (`doc_id * 0`, same idiom as SplitOps.classOffsets): a
     // `lit(0)` gets constant-folded OUT of the window partition spec,
-    // leaving the (tiny, numParts-row) offsets window formally
+    // leaving the (tiny, one-row-per-partition) offsets window formally
     // unpartitioned — harmless here but it trips WindowExec's
     // single-partition warning on every run. ----
     ("x4_shuffle_order",
@@ -2402,7 +2399,7 @@ object Queries {
             DedupOps.md5TokenHash(col("doc_id").cast("string")).as("perm"))
           .withColumn("corpus", (col("doc_id") * 0).cast("int"))
         SplitOps.rankByPermutationScalable(hashed, Seq("corpus"),
-            Seq(col("perm"), col("doc_id")), numParts = 0)
+            Seq(col("perm"), col("doc_id")))
           .select(col("doc_id"), col("perm"), col("pos").as("shuffle_pos"))
           .orderBy(col("doc_id"))
       },
@@ -2426,7 +2423,7 @@ object Queries {
           .select(col("doc_id"), xxhash64(col("doc_id").cast("long")).as("perm"))
           .withColumn("corpus", (col("doc_id") * 0).cast("int"))
         SplitOps.rankByPermutationScalable(hashed, Seq("corpus"),
-            Seq(col("perm"), col("doc_id")), numParts = 0)
+            Seq(col("perm"), col("doc_id")))
           .select(col("doc_id"), col("perm"), col("pos").as("shuffle_pos"))
           .orderBy(col("doc_id"))
       },
@@ -4349,7 +4346,7 @@ object Queries {
           .withColumn("avg_q", expr("sum_surprisal_q div n_tokens"))
           .withColumn("all", lit(0))
         WindowOps.orderedAnalyticsScalable(scored, Seq("all"),
-            Seq(col("avg_q"), col("doc_id")), "avg_q", nTiles = 3, numParts = 0)
+            Seq(col("avg_q"), col("doc_id")), "avg_q", nTiles = 3)
           .withColumn("bucket",
             expr("CASE tile WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END"))
           .groupBy(col("bucket"))
@@ -6156,7 +6153,7 @@ object Queries {
           .withColumn("score_q", expr("n_stop * 1000000 div n_tokens"))
           .withColumn("all", lit(0))
         WindowOps.orderedAnalyticsScalable(scored, Seq("all"),
-            Seq(col("score_q"), col("doc_id")), "score_q", nTiles = 10, numParts = 0)
+            Seq(col("score_q"), col("doc_id")), "score_q", nTiles = 10)
           .groupBy(col("tile"))
           .agg(count(lit(1)).as("n_docs"), min(col("score_q")).as("lo_q"),
             max(col("score_q")).as("hi_q"), sum(col("n_tokens")).as("tot_tokens"))
@@ -6324,7 +6321,7 @@ object Queries {
         TransformOps.winsorizeStats(
           Tables.load(s, dir, "lineitem")
             .select(col("l_returnflag").as("cls"), col("l_extendedprice")),
-          Seq("cls"), "l_extendedprice", p = 0.05, numParts = 0)
+          Seq("cls"), "l_extendedprice", p = 0.05)
       },
       Some("""WITH v AS (SELECT l_returnflag AS cls, CAST(l_extendedprice AS DOUBLE) AS v
              |        FROM lineitem WHERE l_extendedprice IS NOT NULL),
@@ -6394,7 +6391,7 @@ object Queries {
       (s: SparkSession, dir: String) => {
         val ev = Tables.load(s, dir, "events").select(col("event_id"), col("ts"))
         val lat = WindowOps
-          .prefixMaxScalable(ev, col("event_id"), col("ts"), numParts = 0)
+          .prefixMaxScalable(ev, col("event_id"), col("ts"))
           .select((unix_micros(col("run_max")) - unix_micros(col("ts"))).as("lat_us"))
         lat.agg(count(lit(1)).as("n_total"),
             sum(when(col("lat_us") > 0L, 1L).otherwise(0L)).as("late0"),
@@ -6449,7 +6446,7 @@ object Queries {
       (s: SparkSession, dir: String) => {
         graft.dfw.QuantileOps.ksTest(
           Tables.load(s, dir, "lineitem").select("l_extendedprice", "l_shipdate"),
-          "l_extendedprice", col("l_shipdate") < lit("1996-01-01"), numParts = 0)
+          "l_extendedprice", col("l_shipdate") < lit("1996-01-01"))
       },
       Some("""WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v,
              |    CASE WHEN l_shipdate < DATE '1996-01-01' THEN 1 ELSE 0 END AS r
@@ -7028,8 +7025,7 @@ object Queries {
           .agg(count(lit(1)).as("__cnt"))
           .select(datediff(col("__day"), lit("2024-01-01")).cast("long").as("__t"),
             col("__cnt"))
-        graft.dfw.TimeSeriesOps.cusumChangepoint(daily, col("__t"), col("__cnt"),
-          numParts = 0)
+        graft.dfw.TimeSeriesOps.cusumChangepoint(daily, col("__t"), col("__cnt"))
       },
       Some("""WITH d AS (SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS t,
              |    CAST(count(*) AS BIGINT) AS v FROM events GROUP BY 1),
@@ -7509,8 +7505,7 @@ object Queries {
           .agg(min(col("__d")).as("__f"), max(col("__d")).as("__l"))
           .select((col("__l") - col("__f")).as("dur"),
             when(col("__l") < 23, 1L).otherwise(0L).as("ev"))
-        graft.dfw.TimeSeriesOps.kaplanMeier(spans, col("dur"), col("ev"),
-          numParts = 0)
+        graft.dfw.TimeSeriesOps.kaplanMeier(spans, col("dur"), col("ev"))
       },
       Some("""WITH u AS (SELECT user_id,
              |    CAST(min(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))) AS BIGINT) AS f,
@@ -7588,7 +7583,7 @@ object Queries {
         graft.dfw.QuantileOps.mannWhitney(
           Tables.load(s, dir, "events")
             .where(col("event_type").isin("purchase", "click")),
-          "value", col("event_type") === "purchase", numParts = 0)
+          "value", col("event_type") === "purchase")
       },
       Some("""WITH s AS (SELECT CAST(value AS DOUBLE) AS v,
              |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS r
@@ -7627,7 +7622,7 @@ object Queries {
           .withColumn("arm",
             pmod(DedupOps.md5TokenHash(col("user_id").cast("string")), lit(2)))
         graft.dfw.QuantileOps.quantileTreatmentEffect(perUser, col("arm"), "x",
-          Seq(0.25, 0.5, 0.75, 0.9), numParts = 0)
+          Seq(0.25, 0.5, 0.75, 0.9))
       },
       Some("""WITH u AS (SELECT user_id,
              |    CAST(sum(CAST(round(value * 1000000) AS BIGINT)) AS DOUBLE) / 1000000 AS x
@@ -8624,7 +8619,7 @@ object Queries {
       (s: SparkSession, dir: String) => {
         graft.dfw.QuantileOps.medianCi(
           Tables.load(s, dir, "lineitem").select("l_extendedprice"),
-          "l_extendedprice", numParts = 0)
+          "l_extendedprice")
       },
       Some("""WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v
              |  FROM lineitem WHERE l_extendedprice IS NOT NULL),

@@ -234,12 +234,11 @@ object AuditOps {
     *         `top10_share` (6 dp; share of `total` held by the
     *         largest ⌈n/10⌉ units)
     */
-  def giniConcentration(df: DataFrame, valueCol: Column,
-                        numParts: Int = 0): DataFrame = {
+  def giniConcentration(df: DataFrame, valueCol: Column): DataFrame = {
     val vals = df.select(valueCol.cast("long").as("__x")).where(col("__x").isNotNull)
     val counts = vals.groupBy(col("__x")).agg(count(lit(1)).as("__cnt"))
     val run = WindowOps.prefixSumScalable(counts, col("__x"),
-      Seq("cnt" -> col("__cnt"), "vs" -> (col("__x") * col("__cnt"))), numParts)
+      Seq("cnt" -> col("__cnt"), "vs" -> (col("__x") * col("__cnt"))))
     // totals from the FROZEN prefix-sum output (identical exact-integer
     // sums) — aggregating `counts` re-derived the raw scan + both
     // groupBys a second time (same fix as QuantileOps.ksTest, r18)

@@ -157,8 +157,7 @@ object PreProcess {
     */
   def generatorMulti(samples: DataFrame, configs: Seq[DbConfig],
                      orderCols: Seq[Column],
-                     center: Boolean = false, extend: Boolean = false,
-                     numParts: Int = 0): DataFrame = {
+                     center: Boolean = false, extend: Boolean = false): DataFrame = {
     require(configs.nonEmpty, "generatorMulti needs at least one database config")
     require(configs.map(_.db).distinct.length == configs.length,
       "one config per database")
@@ -182,7 +181,7 @@ object PreProcess {
     // second consumer pays is a pruned scan + range exchange, which
     // scales with the pruned columns instead).
     val ranked = SplitOps.rankByPermutationScalable(
-      samples, Seq("db", "descriptor", "cls"), orderCols, numParts)
+      samples, Seq("db", "descriptor", "cls"), orderCols)
     val split = ranked.join(broadcast(cfg), "db")
       .withColumn("train_size",
         SplitOps.trainSizeColDyn(col("n"), col("__train"), col("__is_int"), col("__cv")))
@@ -193,7 +192,7 @@ object PreProcess {
       if (extend) split.withColumn("features", TransformOps.extendBias(col("features")))
       else split
     if (center)
-      TransformOps.centerFeatureArrayFast(extended, Seq("db", "descriptor"), "role", "features")
+      TransformOps.centerFeatureArray(extended, Seq("db", "descriptor"), "role", "features")
     else extended
   }
 

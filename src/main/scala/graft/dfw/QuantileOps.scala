@@ -30,14 +30,14 @@ object QuantileOps {
     *         columns are wanted.
     */
   def exactQuantiles(df: DataFrame, grpCols: Seq[String], valueCol: String,
-                     qs: Seq[Double], numParts: Int = 0): DataFrame = {
+                     qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantiles must be in [0,1], got $qs")
     val vals = df
       .select(grpCols.map(col) :+ col(valueCol).cast("double").as("__v"): _*)
       .where(col("__v").isNotNull) // percentile semantics: nulls ignored
     val ranked = SplitOps
-      .rankByPermutationScalable(vals, grpCols, Seq(col("__v")), numParts)
+      .rankByPermutationScalable(vals, grpCols, Seq(col("__v")))
     // Needed ranks come from the rank output's OWN `n` column — the
     // former shape aggregated group counts from the raw input into a
     // (group × q) broadcast table, which re-derived the input a second
@@ -72,8 +72,8 @@ object QuantileOps {
     * per group.
     */
   def exactQuantileCols(df: DataFrame, grpCols: Seq[String], valueCol: String,
-                        names: Seq[(Double, String)], numParts: Int = 0): DataFrame = {
-    val long = exactQuantiles(df, grpCols, valueCol, names.map(_._1), numParts)
+                        names: Seq[(Double, String)]): DataFrame = {
+    val long = exactQuantiles(df, grpCols, valueCol, names.map(_._1))
     val aggs = names.map { case (q, name) =>
       min(when(col("q") === lit(q), col("value"))).as(name)
     }
@@ -229,8 +229,7 @@ object QuantileOps {
     *         (smallest value attaining D), `p_value` (asymptotic
     *         2·exp(−2D²·nm/(n+m)), 6 dp)
     */
-  def ksTest(df: DataFrame, valueCol: String, isRef: Column,
-             numParts: Int = 0): DataFrame = {
+  def ksTest(df: DataFrame, valueCol: String, isRef: Column): DataFrame = {
     val sliced = df
       .select(col(valueCol).cast("double").as("v"),
         when(isRef, 1L).otherwise(0L).as("__r"))
@@ -238,7 +237,7 @@ object QuantileOps {
     val counts = sliced.groupBy(col("v"))
       .agg(sum(col("__r")).as("rn"), (count(lit(1)) - sum(col("__r"))).as("cn"))
     val run = WindowOps.prefixSumScalable(counts, col("v"),
-      Seq("rn" -> col("rn"), "cn" -> col("cn")), numParts)
+      Seq("rn" -> col("rn"), "cn" -> col("cn")))
     // totals from the FROZEN prefix-sum output (same exact-integer
     // sums), not from `counts` — deriving them upstream re-ran the
     // raw scan + groupBy a second time (r18 plan audit: two parquet
@@ -325,12 +324,12 @@ object QuantileOps {
     *
     * @return single row: `n, median, ci_lo, ci_hi` (6 dp)
     */
-  def medianCi(df: DataFrame, valueCol: String, numParts: Int = 0): DataFrame = {
+  def medianCi(df: DataFrame, valueCol: String): DataFrame = {
     val vals = df.select(col(valueCol).cast("double").as("__v"))
       .where(col("__v").isNotNull)
       .withColumn("__g", lit(1))
     val ranked = SplitOps
-      .rankByPermutationScalable(vals, Seq("__g"), Seq(col("__v")), numParts)
+      .rankByPermutationScalable(vals, Seq("__g"), Seq(col("__v")))
       .select(col("rn"), col("n"), col("__v")) // keep the helper's n
     val z = 1.959964
     val nD = col("n").cast("double")
@@ -446,8 +445,7 @@ object QuantileOps {
     *         (6 dp), `z` (tie-corrected normal approximation, 4 dp;
     *         NULL when either slice is empty or N < 2)
     */
-  def mannWhitney(df: DataFrame, valueCol: String, isRef: Column,
-                  numParts: Int = 0): DataFrame = {
+  def mannWhitney(df: DataFrame, valueCol: String, isRef: Column): DataFrame = {
     val sliced = df
       .select(col(valueCol).cast("double").as("v"),
         when(isRef, 1L).otherwise(0L).as("__r"))
@@ -456,7 +454,7 @@ object QuantileOps {
       .agg(sum(col("__r")).as("rn"), (count(lit(1)) - sum(col("__r"))).as("cn"))
       .withColumn("t", col("rn") + col("cn"))
     val run = WindowOps.prefixSumScalable(counts, col("v"),
-      Seq("t" -> col("t")), numParts)
+      Seq("t" -> col("t")))
     // totals from the FROZEN prefix-sum output (identical exact-integer
     // sums) — aggregating `counts` re-derived the raw scan + groupBy a
     // second time (same fix as ksTest, r18)
@@ -499,10 +497,10 @@ object QuantileOps {
     * @return one row per q, ordered: `q, ctrl, treat, diff` (6 dp)
     */
   def quantileTreatmentEffect(df: DataFrame, armCol: Column, valueCol: String,
-                              qs: Seq[Double], numParts: Int = 0): DataFrame = {
+                              qs: Seq[Double]): DataFrame = {
     val tagged = df.withColumn("__arm", armCol.cast("int"))
       .where(col("__arm").isin(0, 1))
-    val quants = exactQuantiles(tagged, Seq("__arm"), valueCol, qs, numParts)
+    val quants = exactQuantiles(tagged, Seq("__arm"), valueCol, qs)
     quants.groupBy(col("q"))
       .agg(min(when(col("__arm") === 0, col("value"))).as("__c"),
         min(when(col("__arm") === 1, col("value"))).as("__t"))

@@ -98,11 +98,11 @@ object SplitOps {
     *
     * Two-phase distributed rank instead:
     *  1. `repartitionByRange(clsCols ++ orderCols)` — order-preserving
-    *     even spread over `numParts` tasks (no skew: the range
-    *     partitioner samples the sort key);
+    *     even spread over [[adaptiveRangeParts]] tasks (no skew: the
+    *     range partitioner samples the sort key);
     *  2. local `row_number` within (class, physical partition);
-    *  3. per-(class, partition) counts — a TINY table (numParts×classes
-    *     rows) — turned into cumulative offsets and class sizes, then
+    *  3. per-(class, partition) counts — a TINY table (partitions ×
+    *     classes rows) — turned into cumulative offsets and class sizes, then
     *     **broadcast** back; global rank = local rank + offset.
     *
     * Output contract identical to [[rankByPermutation]]: `rn`, `pos`,
@@ -110,10 +110,8 @@ object SplitOps {
     * range boundary would get arbitrary relative ranks otherwise) —
     * the same requirement oracle determinism already imposes.
     *
-    * `numParts <= 0` (the default) sizes the range shuffle from the
-    * input plan's size estimate via [[adaptiveRangeParts]]; an
-    * explicit positive count pins it (tests, or callers that know the
-    * distribution better than the stats do).
+    * The range shuffle is sized from the input plan's size estimate
+    * via [[adaptiveRangeParts]].
     *
     * The ranked rows are NOT frozen, although two consumers (the
     * offset aggregate and the final join) read them — MEASURED, not
@@ -124,10 +122,9 @@ object SplitOps {
     * sf10 98 s lazy vs 263 s frozen).
     */
   def rankByPermutationScalable(df: DataFrame, clsCols: Seq[String],
-                                orderCols: Seq[Column], numParts: Int = 0): DataFrame = {
+                                orderCols: Seq[Column]): DataFrame = {
     val parted = df
-      .repartitionByRange(resolveRangeParts(df, numParts),
-        clsCols.map(col) ++ orderCols: _*)
+      .repartitionByRange(adaptiveRangeParts(df), clsCols.map(col) ++ orderCols: _*)
       .withColumn("__pid", spark_partition_id())
     val localW = Window.partitionBy((clsCols :+ "__pid").map(col): _*).orderBy(orderCols: _*)
     val local = parted.withColumn("__lrn", row_number().over(localW).cast("long"))
@@ -182,15 +179,14 @@ object SplitOps {
     * expansion ABOVE the scan (explode/Generate) keeps ~child-size
     * stats, so the estimate undershoots by the expansion factor and a
     * decade-scale exploded rank lands on the floor and spills
-    * (gracefully). No declared query ranks post-explode; a caller
-    * that does must pass an explicit `numParts` — that parameter is
-    * the documented escape hatch, because no driver-side rule can see
-    * through stats that are wrong by construction without
-    * materializing the input first.
+    * (gracefully). No declared query ranks post-explode. No
+    * driver-side rule can see through stats that are wrong by
+    * construction without materializing the input first, so the
+    * limit stays: such a rank degrades by spilling, not by failing.
     *
-    * The floor is never below 2: the two-phase scalable operators
-    * require more than one range partition, which a floor of `cores`
-    * alone would not give a local[1] session.
+    * The floor is never below 2: a local[1] session still spreads the
+    * two-phase scalable operators over more than one range partition,
+    * so their cross-partition fix-up runs at every core count.
     */
   def adaptiveRangeParts(df: DataFrame): Int = {
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
@@ -198,10 +194,6 @@ object SplitOps {
     val target = bytes / (2L * 1024 * 1024)
     target.max(BigInt(parallelism)).min(BigInt(parallelism) * 32).max(2).toInt
   }
-
-  /** `numParts <= 0` → [[adaptiveRangeParts]]; explicit stays. */
-  private[dfw] def resolveRangeParts(df: DataFrame, numParts: Int): Int =
-    if (numParts > 0) numParts else adaptiveRangeParts(df)
 
   /** W1+W2: tag each ranked row `train` / `test`. Expects the columns
     * added by [[rankByPermutation]]. Adds `train_size` and `role`.

@@ -249,8 +249,7 @@ object TimeSeriesOps {
     * @return per distinct duration: `duration, n_at_risk, d, c,
     *         surv_ppm`, ordered by duration
     */
-  def kaplanMeier(df: DataFrame, durCol: Column, eventCol: Column,
-                  numParts: Int): DataFrame = {
+  def kaplanMeier(df: DataFrame, durCol: Column, eventCol: Column): DataFrame = {
     val byDur = df
       .select(durCol.cast("long").as("duration"),
         eventCol.cast("long").as("__e"))
@@ -258,7 +257,7 @@ object TimeSeriesOps {
       .agg(sum(col("__e")).as("d"),
         sum(lit(1L) - col("__e")).as("c"))
     val run = WindowOps.prefixSumScalable(byDur, col("duration"),
-      Seq(("rem", col("d") + col("c"))), numParts)
+      Seq(("rem", col("d") + col("c"))))
     // total from the FROZEN prefix-sum output (identical exact-integer
     // sum) — aggregating `byDur` re-derived the raw scan + groupBy a
     // second time (same fix as QuantileOps.ksTest, r18)
@@ -273,7 +272,7 @@ object TimeSeriesOps {
             col("n_at_risk").cast("double")) * 1000000).cast("long"))
         .otherwise(lit(-1000000000000L))) // d = n: survival exactly 0
     WindowOps.prefixSumScalable(termed, col("duration"),
-        Seq(("lnS", col("__term_q"))), numParts)
+        Seq(("lnS", col("__term_q"))))
       .withColumn("surv_ppm",
         round(exp(col("run_lnS").cast("double") / 1000000.0) * 1000000).cast("long"))
       .select(col("duration"), col("n_at_risk"), col("d"), col("c"), col("surv_ppm"))
@@ -395,8 +394,8 @@ object TimeSeriesOps {
     * before/after means are doubles (rounded, from exact sums).
     *
     * Plan shape: one 1-row total broadcast, one
-    * [[WindowOps.prefixSumScalable]] pass (range exchange + numParts-
-    * row broadcast — never a single-reducer global window), one final
+    * [[WindowOps.prefixSumScalable]] pass (range exchange + one-row-
+    * per-partition broadcast — never a single-reducer global window), one final
     * all-reduce to a single row. `tickCol` must be unique per row
     * (aggregate to per-tick totals first).
     *
@@ -405,11 +404,10 @@ object TimeSeriesOps {
     *         mean_before, mean_after (null when the argmax is the
     *         final tick — no "after" regime to average)
     */
-  def cusumChangepoint(df: DataFrame, tickCol: Column, vCol: Column,
-                       numParts: Int): DataFrame = {
+  def cusumChangepoint(df: DataFrame, tickCol: Column, vCol: Column): DataFrame = {
     val base = df.select(tickCol.as("__tick"), vCol.cast("long").as("__v"))
     val run = WindowOps.prefixSumScalable(base, col("__tick"),
-      Seq(("v", col("__v")), ("one", lit(1L))), numParts)
+      Seq(("v", col("__v")), ("one", lit(1L))))
     // totals from the FROZEN prefix-sum output (identical exact-integer
     // sums) — aggregating `base` re-scanned the raw input a second time
     val tot = run.agg(sum(col("__v")).as("__tot"),

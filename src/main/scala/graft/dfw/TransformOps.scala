@@ -47,36 +47,16 @@ object TransformOps {
                             cvRoleCol: String, valueCols: Seq[String]): DataFrame =
     centerByTrainMean(df, groupCols :+ foldCol, cvRoleCol, valueCols)
 
-  /** T2 (array form): per-feature mean over ARRAY<DOUBLE> features and
-    * element-wise subtraction via `zip_with` — the whole-vector
-    * variant used when features live in one array column. The mean
-    * vector is computed with `posexplode` + hash aggregate (partial +
-    * final, so it map-side combines at scale).
+  /** T2 (array form): per-feature train mean over ARRAY<DOUBLE>
+    * features, subtracted element-wise via `zip_with` — the
+    * whole-vector variant used when features live in one array column.
+    * The mean vector is one typed `ArrayMeanAgg` aggregation: no
+    * `posexplode` row multiplication, one partial vector per task
+    * ([[graft.functions.Aggregators.ArrayMeanAgg]]). Every row of a
+    * group must have the group's feature count; a ragged row fails.
     */
   def centerFeatureArray(df: DataFrame, groupCols: Seq[String], roleCol: String,
                          featuresCol: String): DataFrame = {
-    val keyCols = groupCols.map(col)
-    val means = df.filter(col(roleCol) === "train")
-      .select(keyCols :+ posexplode(col(featuresCol)).as(Seq("fpos", "fval")): _*)
-      .groupBy((groupCols :+ "fpos").map(col): _*)
-      .agg(avg("fval").as("fmean"))
-      .groupBy(keyCols: _*)
-      .agg(array_sort(collect_list(struct(col("fpos"), col("fmean")))).as("__ms"))
-      .withColumn("__means", expr("transform(__ms, s -> s.fmean)"))
-      .drop("__ms")
-    df.join(broadcast(means), groupCols)
-      .withColumn(s"${featuresCol}_centered",
-        zip_with(col(featuresCol), col("__means"), (x, m) => x - m))
-      .drop("__means")
-  }
-
-  /** T2 (array form, scale path): identical semantics to
-    * [[centerFeatureArray]] via one typed `ArrayMeanAgg` aggregation —
-    * no `posexplode` row multiplication, one partial vector per task
-    * ([[graft.functions.Aggregators.ArrayMeanAgg]]).
-    */
-  def centerFeatureArrayFast(df: DataFrame, groupCols: Seq[String], roleCol: String,
-                             featuresCol: String): DataFrame = {
     val meanUdaf = udaf(graft.functions.Aggregators.ArrayMeanAgg,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]())
     val means = df.filter(col(roleCol) === "train")
@@ -545,7 +525,7 @@ object TransformOps {
     * on values sitting at the bound — rank-selected bounds are actual
     * data values, so the clip decisions replay exactly anywhere.
     * Ranks come from [[SplitOps.rankByPermutationScalable]] (each
-    * group range-partitioned over `numParts` tasks — no per-group
+    * group range-partitioned over many tasks — no per-group
     * single-task window), the two boundary rows per group ride a
     * broadcast, and the clip itself is scan-local arithmetic.
     *
@@ -554,12 +534,12 @@ object TransformOps {
     *         4 dp; bounds are exact data values)
     */
   def winsorizeStats(df: DataFrame, grpCols: Seq[String], valueCol: String,
-                     p: Double, numParts: Int = 0): DataFrame = {
+                     p: Double): DataFrame = {
     require(p > 0 && p < 0.5, s"tail fraction must be in (0, 0.5), got $p")
     val vals = df
       .select(grpCols.map(col) :+ col(valueCol).cast("double").as("__v"): _*)
       .where(col("__v").isNotNull)
-    val ranked = SplitOps.rankByPermutationScalable(vals, grpCols, Seq(col("__v")), numParts)
+    val ranked = SplitOps.rankByPermutationScalable(vals, grpCols, Seq(col("__v")))
     // rank targets per group: ceil(p·n) is evaluated in double on BOTH
     // engines (identical IEEE result), then the bound is the value AT
     // that rank — value-at-rank is tie-insensitive, so no tiebreak
@@ -628,13 +608,12 @@ object TransformOps {
     *         max_difficulty` (6 dp), ordered by phase
     */
   def curriculumPhases(df: DataFrame, idCol: String, difficultyCol: Column,
-                       tokensCol: Column, nPhases: Int,
-                       numParts: Int = 0): DataFrame = {
+                       tokensCol: Column, nPhases: Int): DataFrame = {
     require(nPhases > 0, "nPhases must be positive")
     val base = df.select(col(idCol).as("__id"), difficultyCol.as("__d"),
       tokensCol.cast("long").as("__t"))
     val run = WindowOps.prefixSumScalable(base,
-      struct(col("__d"), col("__id")), Seq("t" -> col("__t")), numParts)
+      struct(col("__d"), col("__id")), Seq("t" -> col("__t")))
     // total from the FROZEN prefix-sum output (identical exact-integer
     // sum) — aggregating `base` re-derived the difficulty-score
     // pipeline a second time (same fix as QuantileOps.ksTest, r18)

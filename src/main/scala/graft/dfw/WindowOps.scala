@@ -14,7 +14,8 @@ import graft.sources.Materializer.freeze
   * [[orderedAnalyticsScalable]] evaluates lag / lead / rank /
   * dense_rank / ntile / cume_dist with the same two-phase scheme as
   * [[SplitOps.rankByPermutationScalable]]: range-partition each class
-  * across `numParts` tasks, rank and lag/lead locally per partition,
+  * across [[SplitOps.adaptiveRangeParts]] tasks, rank and lag/lead
+  * locally per partition,
   * then fix up with a broadcast of one tiny row per (class, partition)
   * — global rank = local rank + preceding partitions' count;
   * boundary rows take their missing lag/lead value from the
@@ -31,12 +32,12 @@ import graft.sources.Materializer.freeze
   * fits a partition" caveat does not apply): the range-exchange key is
   * `clsCols ++ orderCols`, not the class alone, so the range
   * partitioner balances by TOTAL row count — a class holding 95% of
-  * the table simply spans ~95% of the `numParts` partitions, and every
-  * task still holds ~|rows|/numParts rows regardless of how skewed the
+  * the table simply spans ~95% of the range partitions, and every
+  * task still holds ~|rows|/partitions rows regardless of how skewed the
   * class histogram is (pinned by the skew test in WindowOpsSpec). The
   * only per-CLASS structures are on the fix-up side: the offsets
   * window and broadcast are one row per (class, partition) —
-  * ≤ numParts rows per class whatever the data volume. Salting would
+  * ≤ partitions rows per class whatever the data volume. Salting would
   * add a second fix-up layer to bound something this scheme never
   * builds: there is no data-side structure keyed by class alone.
   */
@@ -48,18 +49,11 @@ object WindowOps {
     * @param orderCols total order within each class
     * @param valCol    column whose lag/lead is emitted as prev/next
     * @param nTiles    ntile bucket count
-    * @param numParts  range partitions to spread each class across
     */
   def orderedAnalyticsScalable(df: DataFrame, clsCols: Seq[String],
                                orderCols: Seq[Column], valCol: String,
-                               nTiles: Int, numParts: Int = 0): DataFrame = {
+                               nTiles: Int): DataFrame = {
     require(nTiles > 0, "nTiles must be positive")
-    // numParts <= 0 → sized from the plan's stats (SplitOps
-    // .adaptiveRangeParts): computed once on the driver, so both
-    // partition-id consumers below see the same count — the fixed-32
-    // variant stopped fitting memory at the sf10 decade proof
-    val parts = SplitOps.resolveRangeParts(df, numParts)
-    require(parts > 1, "numParts must spread classes over >1 partition")
     // MATERIALIZE the range partitioning — with the partition id
     // stamped INTO the data first — before anything reads it: two
     // consumers follow (the per-partition count/offset aggregate and
@@ -74,7 +68,7 @@ object WindowOps {
     // the freeze each consumer would re-run the exchange, which is
     // exactly the divergence this freeze exists to prevent.
     val parted = freeze(
-      df.repartitionByRange(parts, clsCols.map(col) ++ orderCols: _*)
+      df.repartitionByRange(SplitOps.adaptiveRangeParts(df), clsCols.map(col) ++ orderCols: _*)
         .withColumn("__pid", spark_partition_id()))
     val keyP = (clsCols :+ "__pid").map(col)
     val localW = Window.partitionBy(keyP: _*).orderBy(orderCols: _*)
@@ -116,9 +110,10 @@ object WindowOps {
   /** Global running maximum (`max(val) OVER (ORDER BY orderCol ROWS
     * UNBOUNDED PRECEDING)`) without the single-task global window that
     * a naive `Window.orderBy` plans: range-partition on `orderCol`
-    * across `numParts` tasks, take each partition's running max
-    * locally, and lift it by the strictly-preceding partitions'
-    * overall max carried on a `numParts`-row broadcast. This is the
+    * across [[SplitOps.adaptiveRangeParts]] tasks, take each
+    * partition's running max locally, and lift it by the
+    * strictly-preceding partitions' overall max carried on a
+    * one-row-per-partition broadcast. This is the
     * watermark replay of streaming ingestion — "what had the
     * high-water mark reached when THIS row arrived" — evaluated over
     * an arrival-ordered log of any size.
@@ -129,13 +124,10 @@ object WindowOps {
     * Adds `run_max`; `greatest` skips the first partition's NULL
     * prefix by definition.
     */
-  def prefixMaxScalable(df: DataFrame, orderCol: Column, valCol: Column,
-                        numParts: Int = 0): DataFrame = {
-    val parts = SplitOps.resolveRangeParts(df, numParts)
-    require(parts > 1, "numParts must spread the order over >1 partition")
+  def prefixMaxScalable(df: DataFrame, orderCol: Column, valCol: Column): DataFrame = {
     val parted = freeze(
       df.withColumn("__pv", valCol)
-        .repartitionByRange(parts, orderCol)
+        .repartitionByRange(SplitOps.adaptiveRangeParts(df), orderCol)
         .withColumn("__pid", spark_partition_id()))
     val localW = Window.partitionBy(col("__pid")).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -154,7 +146,7 @@ object WindowOps {
     * UNBOUNDED PRECEDING)` for several value columns at once) with the
     * same two-phase scheme as [[prefixMaxScalable]]: per-partition
     * local running sums after a range exchange, lifted by the
-    * strictly-preceding partitions' totals on a `numParts`-row
+    * strictly-preceding partitions' totals on a one-row-per-partition
     * broadcast. This is the empirical-CDF builder — feed it per-value
     * slice counts and the running sums ARE the unnormalized CDFs
     * (KS tests, Lorenz/Gini curves, cumulative mixture shares).
@@ -168,14 +160,12 @@ object WindowOps {
     * [[prefixMaxScalable]].
     */
   def prefixSumScalable(df: DataFrame, orderCol: Column,
-                        valCols: Seq[(String, Column)], numParts: Int = 0): DataFrame = {
-    val parts = SplitOps.resolveRangeParts(df, numParts)
-    require(parts > 1, "numParts must spread the order over >1 partition")
+                        valCols: Seq[(String, Column)]): DataFrame = {
     require(valCols.nonEmpty, "at least one value column to sum")
     val named = valCols.map { case (n, c) => (n, s"__pv_$n") }
     val parted = freeze(
       valCols.foldLeft(df) { case (d, (n, c)) => d.withColumn(s"__pv_$n", c) }
-        .repartitionByRange(parts, orderCol)
+        .repartitionByRange(SplitOps.adaptiveRangeParts(df), orderCol)
         .withColumn("__pid", spark_partition_id()))
     val localW = Window.partitionBy(col("__pid")).orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -51,20 +51,28 @@ object Aggregators {
   }
 
   /** Element-wise mean of equal-length ARRAY<DOUBLE> columns in one
-    * pass: buffer = (sums, count). The DataFrame alternative
-    * (`posexplode` + per-position avg + `collect_list` reassembly,
-    * [[graft.dfw.TransformOps.centerFeatureArray]]) multiplies rows by
-    * the feature dimension before aggregating; this ships one partial
-    * vector per task. Used for train-mean centering at width.
+    * pass: buffer = (sums, count). A `posexplode` + per-position avg +
+    * `collect_list` reassembly would multiply rows by the feature
+    * dimension before aggregating; this ships one partial vector per
+    * task. Used for train-mean centering
+    * ([[graft.dfw.TransformOps.centerFeatureArray]]).
+    *
+    * A feature matrix is rectangular: a row whose length differs from
+    * its group's fails the task, naming both lengths, instead of
+    * averaging a truncated prefix over the full row count.
     */
   object ArrayMeanAgg extends Aggregator[Array[Double], (Array[Double], Long), Array[Double]] {
     override def zero: (Array[Double], Long) = (Array.empty[Double], 0L)
 
+    private def sameLength(group: Int, row: Int): Unit =
+      require(group == row,
+        s"ArrayMeanAgg: ragged features, a row of length $row in a group of length $group")
+
     override def reduce(buf: (Array[Double], Long), x: Array[Double]): (Array[Double], Long) = {
       val sums = if (buf._2 == 0L) new Array[Double](x.length) else buf._1
+      sameLength(sums.length, x.length)
       var i = 0
-      val n = math.min(sums.length, x.length)
-      while (i < n) { sums(i) += x(i); i += 1 }
+      while (i < sums.length) { sums(i) += x(i); i += 1 }
       (sums, buf._2 + 1)
     }
 
@@ -72,9 +80,9 @@ object Aggregators {
       if (a._2 == 0L) b
       else if (b._2 == 0L) a
       else {
+        sameLength(a._1.length, b._1.length)
         var i = 0
-        val n = math.min(a._1.length, b._1.length)
-        while (i < n) { a._1(i) += b._1(i); i += 1 }
+        while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
         (a._1, a._2 + b._2)
       }
     }

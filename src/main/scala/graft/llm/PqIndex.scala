@@ -239,7 +239,8 @@ private[llm] object IndexStore {
     val fresh = render(params, corpusSignature(corpus))
     val reuse = !rebuild && readMetaRaw(corpus, indexPath).contains(fresh)
     if (!reuse) {
-      build.write.mode("overwrite").parquet(indexPath)
+      val built = build
+      built.write.mode("overwrite").parquet(indexPath)
       // the overwrite replaced the whole directory, but clear the
       // tombstone table explicitly too — a fresh build subsumes every
       // prior delete, and a leftover tombstone would silently subtract
@@ -247,6 +248,8 @@ private[llm] object IndexStore {
       fsFor(spark, tombstonePath(indexPath)).delete(tombstonePath(indexPath), true)
       val p = metaPath(indexPath)
       writeAtomic(fsFor(corpus, p), p, fresh)
+      // the new files would otherwise cost a schema-inference job
+      Tables.recordWritten(spark, indexPath, built.schema)
     }
     read(spark, indexPath)
   }

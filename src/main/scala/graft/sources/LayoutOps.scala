@@ -111,11 +111,11 @@ object LayoutOps {
     *         key_max`, ordered by bin
     */
   def compactionPlan(files: DataFrame, keyCol: Column, bytesCol: Column,
-                     targetBytes: Long, numParts: Int = 0): DataFrame = {
+                     targetBytes: Long): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
     val run = graft.dfw.WindowOps.prefixSumScalable(
       files.select(keyCol.as("__k"), bytesCol.cast("long").as("__b")),
-      col("__k"), Seq("b" -> col("__b")), numParts)
+      col("__k"), Seq("b" -> col("__b")))
     run
       .withColumn("bin", expr(s"(run_b - 1) div ${targetBytes}L"))
       .groupBy(col("bin"))

@@ -2,9 +2,9 @@ package graft.sources
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Data sources (SURVEY.md §2.1, S1–S6).
   *
@@ -80,11 +80,7 @@ object Tables {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) spark.read.parquet(path)
     else {
-      val it = fs.listFiles(p, true)
-      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
-      val fingerprint: Fingerprint = (files, spark.conf.getAll.filter(_._1.contains("parquet")))
-      val key = fs.makeQualified(p).toString
+      val (key, fingerprint) = keyed(spark, fs, p)
       schemas.get(key) match {
         case Some((`fingerprint`, schema)) => spark.read.schema(schema).parquet(path)
         case _ =>
@@ -93,6 +89,36 @@ object Tables {
           df
       }
     }
+  }
+
+  /** Records the schema of a parquet table just written from a frame
+    * with schema `written`, under the path's current fingerprint, so
+    * the next [[readParquet]] of the unchanged files runs no schema
+    * job. A read sees what the writer stored with every field made
+    * nullable; that is what is recorded. Call it after the last
+    * change to the directory (sidecars included).
+    */
+  def recordWritten(spark: SparkSession, path: String, written: StructType): Unit = {
+    val p = new Path(path)
+    val (key, fingerprint) = keyed(spark, p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    schemas.put(key, (fingerprint, nullable(written)))
+  }
+
+  private def keyed(spark: SparkSession, fs: FileSystem, p: Path): (String, Fingerprint) = {
+    val it = fs.listFiles(p, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+    (fs.makeQualified(p).toString, (files, spark.conf.getAll.filter(_._1.contains("parquet"))))
+  }
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => nullable(s)
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   // ---------------------------------------------------------------

@@ -83,14 +83,14 @@ class AuditOpsSpec extends SparkSpec {
 
   test("giniConcentration: perfect equality reads 0, near-total concentration near 1") {
     val equal = Seq.fill(20)(5L).toDF("x")
-    val g1 = AuditOps.giniConcentration(equal, col("x"), numParts = 4).head()
+    val g1 = AuditOps.giniConcentration(equal, col("x")).head()
     g1.getAs[Long]("n") shouldBe 20L
     g1.getAs[Double]("gini") shouldBe 0.0
     g1.getAs[Double]("top10_share") shouldBe 0.1 +- 1e-9 // top 2 of 20 equal units
 
     // one unit holds everything: gini = (n-1)/n
     val skew = (Seq.fill(9)(0L) :+ 1000L).toDF("x")
-    val g2 = AuditOps.giniConcentration(skew, col("x"), numParts = 4).head()
+    val g2 = AuditOps.giniConcentration(skew, col("x")).head()
     g2.getAs[Double]("gini") shouldBe 0.9 +- 1e-9
     g2.getAs[Double]("top10_share") shouldBe 1.0
   }
@@ -98,7 +98,7 @@ class AuditOpsSpec extends SparkSpec {
   test("giniConcentration matches the per-row rank formula on a mixed fixture") {
     val vals = Seq(1L, 1L, 2L, 3L, 5L, 8L, 13L, 21L, 34L, 55L)
     val df = vals.toDF("x").repartition(3)
-    val got = AuditOps.giniConcentration(df, col("x"), numParts = 4).head()
+    val got = AuditOps.giniConcentration(df, col("x")).head()
     val sorted = vals.sorted
     val n = sorted.size
     val s = sorted.sum.toDouble

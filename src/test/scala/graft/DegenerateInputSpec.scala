@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.apache.spark.sql.functions._
 
 import graft.dfw.{QuantileOps, SplitOps, TimeSeriesOps, TransformOps}
@@ -84,7 +85,7 @@ class DegenerateInputSpec extends SparkSpec {
       .collect() shouldBe empty
     AuditOps.blockJackknifeDiff(Seq.empty[(Int, Int, Long)].toDF("b", "arm", "x"),
       col("arm"), col("x"), col("b")).collect() shouldBe empty
-    QuantileOps.ksTest(noVals, "v", col("is_ref"), numParts = 4).collect() shouldBe empty
+    QuantileOps.ksTest(noVals, "v", col("is_ref")).collect() shouldBe empty
     QuantileOps.chi2Drift(noVals, col("v"), col("is_ref")).collect() shouldBe empty
   }
 
@@ -95,9 +96,9 @@ class DegenerateInputSpec extends SparkSpec {
     TextOps.keynessTopK(noSrc, "source", "text", 5).collect() shouldBe empty
     TransformOps.quotaSample(noSrc, "source", "text", 5).collect() shouldBe empty
     TransformOps.winsorizeStats(noCat.select(col("cat"), col("y").cast("double").as("v")),
-      Seq("cat"), "v", p = 0.1, numParts = 4).collect() shouldBe empty
+      Seq("cat"), "v", p = 0.1).collect() shouldBe empty
     TransformOps.curriculumPhases(Seq.empty[(Long, Double, Long)].toDF("id", "d", "t"),
-      "id", col("d"), col("t"), 4, numParts = 4).collect() shouldBe empty
+      "id", col("d"), col("t"), 4).collect() shouldBe empty
     TransformOps.mutualInfoRanking(noCat.select(col("cat"),
       col("y").cast("double").as("f")), "cat", Seq("f"), 4).collect() shouldBe empty
     TransformOps.featureHashAudit(noCat, Seq("cat"), 16,
@@ -109,7 +110,7 @@ class DegenerateInputSpec extends SparkSpec {
     SimilarityOps.embeddingHealth(Seq.empty[(Int, Array[Float])]
       .toDF("label", "embedding"), "label", "embedding").collect() shouldBe empty
     graft.sources.LayoutOps.compactionPlan(Seq.empty[(String, Long)].toDF("k", "b"),
-      col("k"), col("b"), 1000L, numParts = 4).collect() shouldBe empty
+      col("k"), col("b"), 1000L).collect() shouldBe empty
     graft.llm.GraphOps.kCoreProbe(Seq.empty[(Long, Long)].toDF("src", "dst"),
       "src", "dst", k = 2, rounds = 2)
       .collect().map(_.getAs[Long]("n_nodes")).toSeq shouldBe Seq(0L, 0L)
@@ -127,9 +128,10 @@ class DegenerateInputSpec extends SparkSpec {
     DedupOps.urlCanonDedup(Seq.empty[(Long, String)].toDF("id", "u"),
       col("u"), col("id")).collect() shouldBe empty
     // unkeyed final reduce: one all-null row rather than a throw
-    val cs = TimeSeriesOps.cusumChangepoint(
-      Seq.empty[(Long, Long)].toDF("t", "v"), col("t"), col("v"), numParts = 2)
-      .collect()
+    val cs = withDefaultParallelism(spark.sparkContext, 2) {
+      TimeSeriesOps.cusumChangepoint(Seq.empty[(Long, Long)].toDF("t", "v"), col("t"), col("v"))
+        .collect()
+    }
     cs.length shouldBe 1
     cs(0).isNullAt(cs(0).fieldIndex("cp_tick")) shouldBe true
     TextOps.pmiCollocations(noDocs, "doc_id", "text", 1L, 5).collect() shouldBe empty
@@ -148,13 +150,15 @@ class DegenerateInputSpec extends SparkSpec {
     val noVals = Seq.empty[(Double, Boolean)].toDF("v", "is_ref")
     // unkeyed reduce: mannWhitney emits no row (empty cross of two
     // empty aggregates is fine either way — the pin is "no throw")
-    noException should be thrownBy
-      QuantileOps.mannWhitney(noVals, "v", col("is_ref"), numParts = 2).collect()
+    noException should be thrownBy withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.mannWhitney(noVals, "v", col("is_ref")).collect()
+    }
     QuantileOps.ksTestByGroup(noVals.withColumn("g", lit("a")), col("g"),
       "v", col("is_ref")).collect() shouldBe empty
-    QuantileOps.quantileTreatmentEffect(
-      Seq.empty[(Int, Double)].toDF("arm", "x"), col("arm"), "x",
-      Seq(0.5), numParts = 2).collect() shouldBe empty
+    withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.quantileTreatmentEffect(
+        Seq.empty[(Int, Double)].toDF("arm", "x"), col("arm"), "x", Seq(0.5)).collect()
+    } shouldBe empty
     // documented contract (ADVICE r15): the bootstrap always returns
     // its single row — counts populated, CI columns null — instead of
     // silently vanishing when every replicate drops

@@ -487,7 +487,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_cusum: prefix offsets and totals ride broadcasts, no sort-merge join") {
     val plan = formatted("q_cusum")
-    plan should include("BroadcastHashJoin")        // numParts-row prefix table
+    plan should include("BroadcastHashJoin")        // one-row-per-partition prefix table
     plan should include("BroadcastNestedLoopJoin")  // 1-row totals
     plan should not include "SortMergeJoin"
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.apache.spark.sql.functions._
 
 import graft.dfw.QuantileOps
@@ -18,10 +19,12 @@ class QuantileOpsSpec extends SparkSpec {
     val df = (1 to 5000).map(i => (s"g${i % 3}", rng.nextDouble() * 1000))
       .toDF("g", "v")
     val qs = Seq(0.0, 0.25, 0.5, 0.9, 0.99, 1.0)
-    val got = QuantileOps.exactQuantiles(df, Seq("g"), "v", qs, numParts = 8)
-      .orderBy("g", "q")
-      .select(col("g"), col("q"), round(col("value"), 9).as("value"))
-      .as[(String, Double, Double)].collect()
+    val got = withDefaultParallelism(spark.sparkContext, 8) {
+      QuantileOps.exactQuantiles(df, Seq("g"), "v", qs)
+        .orderBy("g", "q")
+        .select(col("g"), col("q"), round(col("value"), 9).as("value"))
+        .as[(String, Double, Double)].collect()
+    }
     val exp = df.groupBy("g")
       .agg(expr(s"percentile(v, array(${qs.mkString(",")}))").as("vals"))
       .select(col("g"), posexplode(col("vals")))
@@ -38,7 +41,7 @@ class QuantileOpsSpec extends SparkSpec {
   test("single-row group, duplicates, and nulls follow percentile semantics") {
     val df = Seq(("a", Some(5.0)), ("b", Some(1.0)), ("b", Some(1.0)),
       ("b", Some(3.0)), ("b", None)).toDF("g", "v")
-    val got = QuantileOps.exactQuantiles(df, Seq("g"), "v", Seq(0.5), numParts = 4)
+    val got = QuantileOps.exactQuantiles(df, Seq("g"), "v", Seq(0.5))
       .select("g", "value").as[(String, Double)].collect().toMap
     got("a") shouldBe 5.0
     got("b") shouldBe 1.0 // nulls ignored: median of (1,1,3)
@@ -46,9 +49,10 @@ class QuantileOpsSpec extends SparkSpec {
 
   test("exactQuantileCols pivots to one row per group with named columns") {
     val df = Seq(("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 4.0)).toDF("g", "v")
-    val row = QuantileOps.exactQuantileCols(df, Seq("g"), "v",
-      Seq(0.5 -> "med", 1.0 -> "max_v"), numParts = 2)
-      .select("g", "med", "max_v").as[(String, Double, Double)].head()
+    val row = withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.exactQuantileCols(df, Seq("g"), "v", Seq(0.5 -> "med", 1.0 -> "max_v"))
+        .select("g", "med", "max_v").as[(String, Double, Double)].head()
+    }
     row shouldBe (("a", 2.5, 4.0))
   }
 
@@ -101,7 +105,7 @@ class QuantileOpsSpec extends SparkSpec {
     // and the smallest value attaining it is 4
     val df = ((1 to 8).map(v => (v.toDouble, true)) ++
       (5 to 12).map(v => (v.toDouble, false))).toDF("v", "is_ref")
-    val r = QuantileOps.ksTest(df, "v", col("is_ref"), numParts = 4).head()
+    val r = QuantileOps.ksTest(df, "v", col("is_ref")).head()
     r.getAs[Long]("n_ref") shouldBe 8L
     r.getAs[Long]("n_cur") shouldBe 8L
     r.getAs[Long]("d_ppm") shouldBe 500000L
@@ -113,7 +117,7 @@ class QuantileOpsSpec extends SparkSpec {
   test("ksTest: identical slices give D = 0") {
     val df = (1 to 50).flatMap(v =>
       Seq((v.toDouble, true), (v.toDouble, false))).toDF("v", "is_ref")
-    QuantileOps.ksTest(df, "v", col("is_ref"), numParts = 4)
+    QuantileOps.ksTest(df, "v", col("is_ref"))
       .head().getAs[Long]("d_ppm") shouldBe 0L
   }
 
@@ -124,7 +128,9 @@ class QuantileOpsSpec extends SparkSpec {
     // var = 6/12·(6 − 24/20) = 2.4; z = (2−6)/(2√2.4) = −1.2910
     val df = Seq((1.0, true), (2.0, true), (2.0, true), (2.0, false),
       (3.0, false)).toDF("v", "is_ref")
-    val r = QuantileOps.mannWhitney(df, "v", col("is_ref"), numParts = 2).head()
+    val r = withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.mannWhitney(df, "v", col("is_ref")).head()
+    }
     r.getAs[Long]("n_ref") shouldBe 3L
     r.getAs[Long]("n_cur") shouldBe 2L
     r.getAs[Long]("u2_ref") shouldBe 2L
@@ -136,7 +142,7 @@ class QuantileOpsSpec extends SparkSpec {
   test("mannWhitney: identical slices give U at its null mean (z 0, auc 0.5)") {
     val df = (1 to 40).flatMap(v =>
       Seq((v.toDouble, true), (v.toDouble, false))).toDF("v", "is_ref")
-    val r = QuantileOps.mannWhitney(df, "v", col("is_ref"), numParts = 4).head()
+    val r = QuantileOps.mannWhitney(df, "v", col("is_ref")).head()
     r.getAs[Double]("auc") shouldBe 0.5 +- 1e-9
     r.getAs[Double]("z") shouldBe 0.0 +- 1e-9
   }
@@ -146,7 +152,7 @@ class QuantileOpsSpec extends SparkSpec {
       (5 to 12).map(v => (v.toDouble, false)))
       .map { case (v, r) => ("g", v, r) }.toDF("grp", "v", "is_ref")
     val per = QuantileOps.ksTestByGroup(df, col("grp"), "v", col("is_ref")).head()
-    val ref = QuantileOps.ksTest(df, "v", col("is_ref"), numParts = 4).head()
+    val ref = QuantileOps.ksTest(df, "v", col("is_ref")).head()
     per.getAs[Long]("d_ppm") shouldBe ref.getAs[Long]("d_ppm")
     per.getAs[Double]("ks_at") shouldBe ref.getAs[Double]("ks_at")
     per.getAs[Double]("p_value") shouldBe ref.getAs[Double]("p_value")
@@ -156,7 +162,9 @@ class QuantileOpsSpec extends SparkSpec {
     // n=9: median rank 5 → 5.0; z√9 = 5.88 → rlo floor(1.56)=1,
     // rhi ceil(8.44)=9 — the CI spans the whole small sample
     val df = (1 to 9).map(_.toDouble).toDF("v")
-    val r = QuantileOps.medianCi(df, "v", numParts = 2).head()
+    val r = withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.medianCi(df, "v").head()
+    }
     r.getAs[Long]("n") shouldBe 9L
     r.getAs[Double]("median") shouldBe 5.0
     r.getAs[Double]("ci_lo") shouldBe 1.0
@@ -165,7 +173,7 @@ class QuantileOpsSpec extends SparkSpec {
 
   test("medianCi: even n interpolates; larger n tightens the interval") {
     val df = (1 to 100).map(_.toDouble).toDF("v")
-    val r = QuantileOps.medianCi(df, "v", numParts = 4).head()
+    val r = QuantileOps.medianCi(df, "v").head()
     r.getAs[Double]("median") shouldBe 50.5
     // rlo = floor((100-19.6)/2) = 40; rhi = ceil(1+(100+19.6)/2) = 61
     r.getAs[Double]("ci_lo") shouldBe 40.0
@@ -175,9 +183,10 @@ class QuantileOpsSpec extends SparkSpec {
   test("quantileTreatmentEffect: a constant shift shows at every quantile") {
     val df = ((1 to 9).map(v => (0, v.toDouble)) ++
       (1 to 9).map(v => (1, v.toDouble + 10))).toDF("arm", "x")
-    val got = QuantileOps.quantileTreatmentEffect(df, col("arm"), "x",
-        Seq(0.25, 0.5, 0.75), numParts = 2)
-      .select("q", "diff").as[(Double, Double)].collect().toMap
+    val got = withDefaultParallelism(spark.sparkContext, 2) {
+      QuantileOps.quantileTreatmentEffect(df, col("arm"), "x", Seq(0.25, 0.5, 0.75))
+        .select("q", "diff").as[(Double, Double)].collect().toMap
+    }
     got(0.25) shouldBe 10.0
     got(0.5) shouldBe 10.0
     got(0.75) shouldBe 10.0

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 import graft.dfw.QuantileOps
@@ -49,8 +50,10 @@ object QuantileProps extends Properties("QuantileOps.exactQuantiles") {
       val s = spark
       import s.implicits._
       val df = rows.toDF("g", "v")
-      val got = QuantileOps.exactQuantiles(df, Seq("g"), "v", qs, numParts = parts)
-        .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+      val got = withDefaultParallelism(s.sparkContext, parts) {
+        QuantileOps.exactQuantiles(df, Seq("g"), "v", qs)
+          .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
+      }
       val byGroup = rows.groupBy(_._1).view
         .mapValues(_.flatMap(_._2)).toMap
       val expected = for {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,11 +100,14 @@ class SplitOpsSpec extends SparkSpec {
     }.toDF("cls", "sample_id", "perm")
     val plain = SplitOps.rankByPermutation(df, Seq("cls"), Seq(col("perm"), col("sample_id")))
       .select("cls", "sample_id", "rn", "pos", "n")
-    val scalable = SplitOps.rankByPermutationScalable(df, Seq("cls"),
-        Seq(col("perm"), col("sample_id")), numParts = 7)
-      .select("cls", "sample_id", "rn", "pos", "n")
-    plain.exceptAll(scalable).count() shouldBe 0
-    scalable.exceptAll(plain).count() shouldBe 0
+    withDefaultParallelism(spark.sparkContext, 7) {
+      SplitOps.adaptiveRangeParts(df) shouldBe 7
+      val scalable = SplitOps.rankByPermutationScalable(df, Seq("cls"),
+          Seq(col("perm"), col("sample_id")))
+        .select("cls", "sample_id", "rn", "pos", "n")
+      plain.exceptAll(scalable).count() shouldBe 0
+      scalable.exceptAll(plain).count() shouldBe 0
+    }
   }
 
   test("adaptiveRangeParts: clamp band holds for honest and garbage estimates (r19)") {
@@ -127,12 +131,15 @@ class SplitOpsSpec extends SparkSpec {
       (s"c${i % 3}", i.toLong, (i * 2654435761L) % 97L)
     }.toDF("cls", "sample_id", "perm")
     val atFloor = SplitOps.rankByPermutationScalable(df, Seq("cls"),
-      Seq(col("perm"), col("sample_id")), numParts = cores)
-    val atCeil = SplitOps.rankByPermutationScalable(df, Seq("cls"),
-      Seq(col("perm"), col("sample_id")), numParts = 32 * cores)
-    atFloor.select("cls", "sample_id", "rn", "pos", "n")
-      .exceptAll(atCeil.select("cls", "sample_id", "rn", "pos", "n"))
-      .count() shouldBe 0
+      Seq(col("perm"), col("sample_id")))
+    withDefaultParallelism(spark.sparkContext, 32 * cores) {
+      SplitOps.adaptiveRangeParts(df) shouldBe 32 * cores
+      val atCeil = SplitOps.rankByPermutationScalable(df, Seq("cls"),
+        Seq(col("perm"), col("sample_id")))
+      atFloor.select("cls", "sample_id", "rn", "pos", "n")
+        .exceptAll(atCeil.select("cls", "sample_id", "rn", "pos", "n"))
+        .count() shouldBe 0
+    }
   }
 
   test("W5 offsets accumulate preceding train sizes in class order") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.apache.spark.sql.functions._
 
@@ -37,7 +38,9 @@ object StatsProps extends Properties("graft.stats.laws") {
     Prop.forAll(genSlices) { rows =>
       val df = rows.toDF("v", "is_ref")
       def stats(d: org.apache.spark.sql.DataFrame) = {
-        val r = QuantileOps.mannWhitney(d, "v", col("is_ref"), numParts = 3).head()
+        val r = withDefaultParallelism(spark.sparkContext, 3) {
+          QuantileOps.mannWhitney(d, "v", col("is_ref")).head()
+        }
         (r.getLong(2), r.getLong(3), r.getAs[Double]("auc"), r.getAs[Double]("z"))
       }
       val base = stats(df)
@@ -89,7 +92,9 @@ object StatsProps extends Properties("graft.stats.laws") {
 
   property("medianCi brackets its median; both bounds are data values") =
     Prop.forAll(Gen.nonEmptyListOf(Gen.oneOf(grid)), Gen.choose(2, 6)) { (vals, parts) =>
-      val r = QuantileOps.medianCi(vals.toDF("v"), "v", numParts = parts).head()
+      val r = withDefaultParallelism(spark.sparkContext, parts) {
+        QuantileOps.medianCi(vals.toDF("v"), "v").head()
+      }
       val (med, lo, hi) = (r.getAs[Double]("median"),
         r.getAs[Double]("ci_lo"), r.getAs[Double]("ci_hi"))
       Prop(lo <= med && med <= hi) :| s"lo=$lo med=$med hi=$hi" &&

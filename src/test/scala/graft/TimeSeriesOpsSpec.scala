@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.dfw.TimeSeriesOps
@@ -187,8 +188,9 @@ class TimeSeriesOpsSpec extends SparkSpec {
     // low regime); G = T·run − t·total = [-30,-60,-90,-60,-30,0]
     val d = Seq((0L, 10L), (1L, 10L), (2L, 10L), (3L, 20L), (4L, 20L), (5L, 20L))
       .toDF("t", "v")
-    val got = TimeSeriesOps.cusumChangepoint(d, col("t"), col("v"), numParts = 3)
-      .collect()
+    val got = withDefaultParallelism(spark.sparkContext, 3) {
+      TimeSeriesOps.cusumChangepoint(d, col("t"), col("v")).collect()
+    }
     got.length shouldBe 1
     val r = got(0)
     r.getAs[Long]("n_ticks") shouldBe 6L
@@ -203,8 +205,10 @@ class TimeSeriesOpsSpec extends SparkSpec {
     // events at t=1,2,3; one censor at t=2:
     // S(1)=3/4, S(2)=3/4·2/3=1/2, S(3)=0 (everyone at risk exits)
     val subjects = Seq((1L, 1L), (2L, 1L), (2L, 0L), (3L, 1L)).toDF("dur", "ev")
-    val got = TimeSeriesOps.kaplanMeier(subjects, col("dur"), col("ev"), numParts = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    val got = withDefaultParallelism(spark.sparkContext, 2) {
+      TimeSeriesOps.kaplanMeier(subjects, col("dur"), col("ev"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    }
     got.toSeq shouldBe Seq(
       (1L, 4L, 1L, 0L, 750000L),
       (2L, 3L, 1L, 1L, 500000L),
@@ -213,8 +217,10 @@ class TimeSeriesOpsSpec extends SparkSpec {
 
   test("kaplanMeier: a censor-only duration leaves survival unchanged") {
     val subjects = Seq((1L, 0L), (2L, 1L)).toDF("dur", "ev")
-    val got = TimeSeriesOps.kaplanMeier(subjects, col("dur"), col("ev"), numParts = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(4)))
+    val got = withDefaultParallelism(spark.sparkContext, 2) {
+      TimeSeriesOps.kaplanMeier(subjects, col("dur"), col("ev"))
+        .collect().map(r => (r.getLong(0), r.getLong(4)))
+    }
     got.toSeq shouldBe Seq((1L, 1000000L), (2L, 0L)) // d=0 at t=1; d=n=1 at t=2
   }
 
@@ -272,8 +278,9 @@ class TimeSeriesOpsSpec extends SparkSpec {
 
   test("cusumChangepoint: all-constant series ties break to the earliest tick") {
     val d = Seq((0L, 5L), (1L, 5L), (2L, 5L)).toDF("t", "v")
-    val r = TimeSeriesOps.cusumChangepoint(d, col("t"), col("v"), numParts = 2)
-      .collect()(0)
+    val r = withDefaultParallelism(spark.sparkContext, 2) {
+      TimeSeriesOps.cusumChangepoint(d, col("t"), col("v")).collect()(0)
+    }
     r.getAs[Long]("g_abs_max") shouldBe 0L
     r.getAs[Long]("cp_tick") shouldBe 0L
     r.getAs[Double]("mean_before") shouldBe 5.0

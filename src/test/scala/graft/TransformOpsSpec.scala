@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.apache.spark.sql.functions._
 
 import graft.dfw.{SliceOps, TransformOps}
@@ -31,23 +32,33 @@ class TransformOpsSpec extends SparkSpec {
   test("T2 array form: per-feature mean subtracted element-wise") {
     val df = Seq(
       ("a", "train", Seq(1.0, 10.0)), ("a", "train", Seq(3.0, 30.0)),
-      ("a", "test", Seq(5.0, 50.0))).toDF("cls", "role", "f")
-    val got = TransformOps.centerFeatureArray(df, Seq("cls"), "role", "f")
-      .filter(col("role") === "test")
-      .select("f_centered").head().getSeq[Double](0)
-    got shouldBe Seq(5.0 - 2.0, 50.0 - 20.0)
-  }
-
-  test("T2 array form (typed aggregator) matches the posexplode implementation") {
-    val df = Seq(
-      ("a", "train", Seq(1.0, 10.0)), ("a", "train", Seq(3.0, 30.0)),
       ("a", "test", Seq(5.0, 50.0)), ("b", "train", Seq(2.0, 4.0)))
       .toDF("cls", "role", "f")
-    def result(d: org.apache.spark.sql.DataFrame) = d
-      .select("cls", "role", "f_centered").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getSeq[Double](2))).toSet
-    result(TransformOps.centerFeatureArrayFast(df, Seq("cls"), "role", "f")) shouldBe
-      result(TransformOps.centerFeatureArray(df, Seq("cls"), "role", "f"))
+    val got = TransformOps.centerFeatureArray(df, Seq("cls"), "role", "f")
+      .select("cls", "role", "f", "f_centered").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getSeq[Double](2)) -> r.getSeq[Double](3))
+    // class a train mean = (2, 20): the (5, 50) test row must not
+    // contribute; class b's one train row is its own mean
+    got.toSet shouldBe Set(
+      ("a", "train", Seq(1.0, 10.0)) -> Seq(1.0 - 2.0, 10.0 - 20.0),
+      ("a", "train", Seq(3.0, 30.0)) -> Seq(3.0 - 2.0, 30.0 - 20.0),
+      ("a", "test", Seq(5.0, 50.0)) -> Seq(5.0 - 2.0, 50.0 - 20.0),
+      ("b", "train", Seq(2.0, 4.0)) -> Seq(0.0, 0.0))
+  }
+
+  test("T2 array form: a ragged train row fails, naming both lengths") {
+    // the shorter row would otherwise truncate the group's sums yet
+    // still count toward n, giving a silently wrong mean
+    val df = Seq(
+      ("a", "train", Seq(1.0, 10.0)), ("a", "train", Seq(3.0)),
+      ("a", "test", Seq(5.0, 50.0))).toDF("cls", "role", "f")
+      .coalesce(1)
+    val e = intercept[Exception] {
+      TransformOps.centerFeatureArray(df, Seq("cls"), "role", "f").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    msgs should include("a row of length 1 in a group of length 2")
   }
 
   test("T3 per-fold centering groups by (keys, fold)") {
@@ -349,7 +360,7 @@ class TransformOpsSpec extends SparkSpec {
     // 4 rows clip low (1..4), 4 clip high (97..100)
     val df = (1 to 100).map(i => ("g", i.toDouble)).toDF("cls", "v")
       .repartition(5)
-    val r = TransformOps.winsorizeStats(df, Seq("cls"), "v", p = 0.05, numParts = 4).head()
+    val r = TransformOps.winsorizeStats(df, Seq("cls"), "v", p = 0.05).head()
     r.getAs[Long]("n") shouldBe 100L
     r.getAs[Double]("lo_bound") shouldBe 5.0
     r.getAs[Double]("hi_bound") shouldBe 96.0
@@ -363,10 +374,12 @@ class TransformOpsSpec extends SparkSpec {
 
   test("winsorizeStats: singleton group clips nothing (bounds = the value)") {
     val df = Seq(("g", 42.0), ("h", 1.0), ("h", 2.0), ("h", 3.0)).toDF("cls", "v")
-    val got = TransformOps.winsorizeStats(df, Seq("cls"), "v", p = 0.1, numParts = 2)
-      .collect().map(r => r.getString(0) ->
-        ((r.getAs[Double]("lo_bound"), r.getAs[Double]("hi_bound"),
-          r.getAs[Long]("n_clipped_lo") + r.getAs[Long]("n_clipped_hi")))).toMap
+    val got = withDefaultParallelism(spark.sparkContext, 2) {
+      TransformOps.winsorizeStats(df, Seq("cls"), "v", p = 0.1)
+        .collect().map(r => r.getString(0) ->
+          ((r.getAs[Double]("lo_bound"), r.getAs[Double]("hi_bound"),
+            r.getAs[Long]("n_clipped_lo") + r.getAs[Long]("n_clipped_hi")))).toMap
+    }
     got("g") shouldBe ((42.0, 42.0, 0L))
     got("h") shouldBe ((1.0, 3.0, 0L)) // rlo=1, rhi=3: extremes are the bounds
   }
@@ -389,7 +402,7 @@ class TransformOpsSpec extends SparkSpec {
     val df = (1 to 12).map(i => (i.toLong, i.toDouble, 10L))
       .toDF("id", "diff", "tok").repartition(3)
     val got = TransformOps.curriculumPhases(df, "id", col("diff"), col("tok"),
-        nPhases = 4, numParts = 4)
+        nPhases = 4)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getAs[Double]("min_difficulty"),
           r.getAs[Double]("max_difficulty")))).toMap
@@ -402,8 +415,9 @@ class TransformOpsSpec extends SparkSpec {
   test("curriculumPhases: uneven token lengths never split a doc across phases") {
     val df = Seq((1L, 1.0, 50L), (2L, 2.0, 50L), (3L, 3.0, 5L), (4L, 4.0, 95L))
       .toDF("id", "diff", "tok")
-    val got = TransformOps.curriculumPhases(df, "id", col("diff"), col("tok"),
-        nPhases = 2, numParts = 2).collect()
+    val got = withDefaultParallelism(spark.sparkContext, 2) {
+      TransformOps.curriculumPhases(df, "id", col("diff"), col("tok"), nPhases = 2).collect()
+    }
     got.map(_.getAs[Long]("n_docs")).sum shouldBe 4L
     got.map(_.getAs[Long]("tokens")).sum shouldBe 200L
     // budget 100: docs 1,2 fill phase 0 exactly; 3,4 land in phase 1

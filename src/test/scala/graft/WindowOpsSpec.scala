@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.DefaultParallelism.withDefaultParallelism
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,11 +31,13 @@ class WindowOpsSpec extends SparkSpec {
         round(cume_dist().over(w), 9).as("cd"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
 
-    val scalable = WindowOps.orderedAnalyticsScalable(
-        df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 4, numParts = 8)
-      .select(col("cls"), col("id"), col("prev"), col("next"), col("rn"),
-        col("tile"), round(col("cd"), 9).as("cd"))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
+    val scalable = withDefaultParallelism(spark.sparkContext, 8) {
+      WindowOps.orderedAnalyticsScalable(
+          df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 4)
+        .select(col("cls"), col("id"), col("prev"), col("next"), col("rn"),
+          col("tile"), round(col("cd"), 9).as("cd"))
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
+    }
 
     scalable.keySet shouldBe direct.keySet
     for ((k, v) <- direct) withClue(s"row $k: ") { scalable(k) shouldBe v }
@@ -42,7 +45,7 @@ class WindowOpsSpec extends SparkSpec {
 
   test("orderedAnalyticsScalable: a 99%-skewed class spans partitions and stays window-exact") {
     // class A holds 5000 of 5050 rows: under a class-keyed exchange it
-    // would be ONE task at any numParts; the range key appends the
+    // would be ONE task at any partition count; the range key appends the
     // order columns, so the partitioner balances by total rows instead
     val rows =
       (0 until 5000).map(i => ("A", i.toLong, (i * 7919 % 1000).toDouble)) ++
@@ -62,10 +65,12 @@ class WindowOpsSpec extends SparkSpec {
         rank().over(w).cast("long").as("rn"),
         ntile(10).over(w).cast("long").as("tile"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
-    val scalable = WindowOps.orderedAnalyticsScalable(
-        df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 10, numParts = 8)
-      .select(col("cls"), col("id"), col("prev"), col("next"), col("rn"), col("tile"))
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
+    val scalable = withDefaultParallelism(spark.sparkContext, 8) {
+      WindowOps.orderedAnalyticsScalable(
+          df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 10)
+        .select(col("cls"), col("id"), col("prev"), col("next"), col("rn"), col("tile"))
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.toSeq.drop(2)).toMap
+    }
     scalable.keySet shouldBe direct.keySet
     for ((k, v) <- direct) withClue(s"row $k: ") { scalable(k) shouldBe v }
   }
@@ -74,7 +79,7 @@ class WindowOpsSpec extends SparkSpec {
     val df = Seq(("A", 1L, 5.0), ("A", 2L, 3.0), ("B", 3L, 1.0))
       .toDF("cls", "id", "v")
     val got = WindowOps.orderedAnalyticsScalable(
-        df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 4, numParts = 4)
+        df, Seq("cls"), Seq(col("v"), col("id")), "v", nTiles = 4)
       .select("cls", "id", "rn", "n", "tile")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     got(("A", 2L)) shouldBe ((1L, 2L, 1L)) // v=3 ranks first
@@ -94,9 +99,11 @@ class WindowOpsSpec extends SparkSpec {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val direct = df.select(col("id"), max(col("v")).over(w).as("m"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = WindowOps.prefixMaxScalable(df, col("id"), col("v"), numParts = 8)
-      .select(col("id"), col("run_max"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = withDefaultParallelism(spark.sparkContext, 8) {
+      WindowOps.prefixMaxScalable(df, col("id"), col("v"))
+        .select(col("id"), col("run_max"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     got shouldBe direct
   }
 
@@ -108,10 +115,11 @@ class WindowOpsSpec extends SparkSpec {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val direct = df.select(col("id"), sum(col("a")).over(w).as("ra"), sum(col("b")).over(w).as("rb"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val got = WindowOps.prefixSumScalable(df, col("id"),
-        Seq("a" -> col("a"), "b" -> col("b")), numParts = 8)
-      .select(col("id"), col("run_a"), col("run_b"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = withDefaultParallelism(spark.sparkContext, 8) {
+      WindowOps.prefixSumScalable(df, col("id"), Seq("a" -> col("a"), "b" -> col("b")))
+        .select(col("id"), col("run_a"), col("run_b"))
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    }
     got shouldBe direct
   }
 }

@@ -91,8 +91,7 @@ class ZOrderSpec extends SparkSpec {
     // 26 files of 10..260 bytes keyed a..z; target 300
     val files = ('a' to 'z').zipWithIndex
       .map { case (k, i) => (k.toString, (i + 1) * 10L) }.toDF("k", "b")
-    val plan = LayoutOps.compactionPlan(files, col("k"), col("b"), targetBytes = 300L,
-      numParts = 4).collect()
+    val plan = LayoutOps.compactionPlan(files, col("k"), col("b"), targetBytes = 300L).collect()
     plan.map(_.getAs[Long]("n_files")).sum shouldBe 26L
     plan.map(_.getAs[Long]("bin_bytes")).sum shouldBe (10L to 260L by 10).sum
     // bins are consecutive: each bin's key_min follows the previous key_max
@@ -107,8 +106,7 @@ class ZOrderSpec extends SparkSpec {
   test("compactionPlan groups many small files into one bin") {
     import spark.implicits._
     val files = (1 to 100).map(i => (f"f$i%03d", 10L)).toDF("k", "b")
-    val plan = LayoutOps.compactionPlan(files, col("k"), col("b"), targetBytes = 500L,
-      numParts = 4).collect()
+    val plan = LayoutOps.compactionPlan(files, col("k"), col("b"), targetBytes = 500L).collect()
     plan.length shouldBe 2
     all(plan.map(_.getAs[Long]("n_files"))) shouldBe 50L
   }

@@ -73,6 +73,28 @@ class IndexStoreSpec extends SparkSpec {
     idsOf(IndexStore.read(spark, idx)) shouldBe (5L until 20L).toSet
   }
 
+  test("a (re)built index reads back with no schema job, under the schema a fresh read infers") {
+    val base = freshBase()
+    val corpus = writeCorpus(base.resolve("corpus").toString, 0 until 10)
+    val idx = base.resolve("idx").toString
+    // non-nullable and nested fields: the frame's own schema differs
+    // from what a parquet read reports until every field is nullable
+    def build = corpus.select(col("id"), lit(1).as("one"),
+      array(col("id").cast("float")).as("vec"),
+      struct(col("payload"), lit(2L).as("k")).as("s"),
+      map(lit("k"), col("id")).as("m"))
+    val (_, writeJobs) = jobsDuring(
+      build.write.mode("overwrite").parquet(base.resolve("bare").toString))
+    for (_ <- 1 to 2) { // a first build, then a forced rebuild over it
+      val (got, jobs) = jobsDuring(IndexStore.loadOrBuild(corpus, "typed", idx, rebuild = true)(build))
+      jobs shouldBe writeJobs
+      got.schema shouldBe spark.read.parquet(idx).schema
+    }
+    val (again, readJobs) = jobsDuring(IndexStore.read(spark, idx))
+    readJobs shouldBe 0
+    idsOf(again) shouldBe (0L until 10L).toSet
+  }
+
   test("deleteFrom stale/missing sidecar returns false and writes nothing") {
     val base = freshBase()
     val corpusDir = base.resolve("corpus").toString

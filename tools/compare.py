@@ -48,15 +48,31 @@ def type_skew(con, name, sql, spark_glob):
             bad.append(f"col {c}: spark {got_t[c]} vs oracle {exp_t[c]}")
     return bad
 
+# Share of the machine's RAM DuckDB may use by default: it must fit
+# beside a JVM test run on the same box.
+MEM_SHARE = 0.4
+
+def default_memory_limit():
+    """MEM_SHARE of MemTotal from /proc/meminfo, as a DuckDB size."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{int(int(line.split()[1]) * MEM_SHARE) // 1024}MB"
+    except OSError:
+        pass
+    return "24GB"  # no /proc: the limit used before it was sized to the box
+
 def main(sfdir, outdir, json_out=None, sf_label=None, round_no=None, scope=None):
     results = {}
     con = duckdb.connect()
-    # Memory-bounded staging for the sf1 monsters (VERDICT r17 item 4):
-    # without a limit DuckDB's q_markov_attribution replay peaked 64 GB
-    # on the 128 GiB box — one more testdata bump and the gate stops
-    # fitting. A hard limit + disk-backed temp makes the replica SPILL
-    # instead of balloon; results are unchanged. Override via env.
-    mem = os.environ.get("GRAFT_ORACLE_MEM", "24GB")
+    # Memory-bounded staging: without a limit DuckDB's
+    # q_markov_attribution replay at sf1 peaked 64 GB, and at sf0.1 the
+    # replica peaks above 10 GB. A hard limit + disk-backed temp makes
+    # the replica SPILL instead of balloon; results are unchanged. The
+    # default is sized from this machine's RAM; GRAFT_ORACLE_MEM
+    # overrides it.
+    mem = os.environ.get("GRAFT_ORACLE_MEM") or default_memory_limit()
     tmp = os.environ.get("GRAFT_ORACLE_TMP", "/tmp/graft-duckdb-spill")
     os.makedirs(tmp, exist_ok=True)
     con.execute(f"SET memory_limit='{mem}'")

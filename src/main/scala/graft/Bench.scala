@@ -138,19 +138,15 @@ object Bench {
     // that can actually be compared across rounds. Set 1 for dev loops.
     val repsEnv = sys.env.get("SPARK_GRAFT_BENCH_REPS")
     val reps = repsEnv.getOrElse("3").toInt.max(1)
-    // Sub-second rows get extra reps (to SPARK_GRAFT_BENCH_SUBSEC_REPS,
-    // default 5): this box shows 1.3-2.7x day-to-day drift on exactly
-    // those rows at 3 reps (round-16 driver artifact vs same-binary
-    // idle-box medians — 45 queries, all sub-second, all box noise),
-    // and extra reps are cheap by construction there (<1 s each). The
-    // median of 5 pins the steady state; expensive rows keep `reps`.
-    // When REPS is EXPLICITLY 1 (the documented dev-loop setting) the
-    // sub-second boost defaults off too — a dev loop asking for one
-    // rep should get one rep, without also having to know about the
-    // second env var. SUBSEC_REPS set explicitly still wins.
-    val subSecDefault = if (repsEnv.contains("1")) reps else 5
-    val subSecReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUBSEC_REPS",
-      subSecDefault.toString).toInt.max(reps)
+    // Sub-second rows get 5 reps: this box shows 1.3-2.7x day-to-day
+    // drift on exactly those rows at 3 reps (round-16 driver artifact
+    // vs same-binary idle-box medians — 45 queries, all sub-second, all
+    // box noise), and extra reps are cheap by construction there (<1 s
+    // each). The median of 5 pins the steady state; expensive rows keep
+    // `reps`. When REPS is EXPLICITLY 1 (the documented dev-loop
+    // setting) the sub-second boost is off too — a dev loop asking for
+    // one rep gets one rep.
+    val subSecReps = if (repsEnv.contains("1")) reps else 5.max(reps)
     // Timed-loop preamble (VERDICT r18 item 2): the first timed slot
     // sits right after the FULL warm-up pass — its own warm-up ran
     // ~270 queries earlier, so any warmup→timed phase-transition cost

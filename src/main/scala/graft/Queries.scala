@@ -2084,26 +2084,12 @@ object Queries {
              |GROUP BY c.c_mktsegment, e.event_type
              |ORDER BY c.c_mktsegment, e.event_type""".stripMargin)),
 
-    // ---- X1: exact dedup (keep lowest id per normalized key) ----
-    ("x1_dedup_exact",
-      (s: SparkSession, dir: String) => {
-        DedupOps.exactDedup(Tables.load(s, dir, "documents"),
-            substring(col("text"), 1, 50), "doc_id")
-          .select(col("doc_id"), col("n_dups"))
-          .orderBy(col("doc_id"))
-      },
-      Some("""WITH k AS (SELECT doc_id, substr(text, 1, 50) AS key FROM documents),
-             |r AS (SELECT doc_id,
-             |        row_number() OVER (PARTITION BY key ORDER BY doc_id) AS rn,
-             |        count(*) OVER (PARTITION BY key) AS cnt FROM k)
-             |SELECT doc_id, CAST(cnt AS BIGINT) AS n_dups FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
-
-    // ---- X1 scalable twin: window-free exact dedup — two-phase hash
-    // agg (map-side combine absorbs key skew) + join-back on the
-    // unique winning id; same oracle semantics ----
+    // ---- X1: exact dedup (keep lowest id per normalized key) —
+    // window-free: two-phase hash agg (map-side combine absorbs key
+    // skew) + join-back on the unique winning id ----
     ("x1_dedup_exact_scalable",
       (s: SparkSession, dir: String) => {
-        DedupOps.exactDedupScalable(Tables.load(s, dir, "documents"),
+        DedupOps.exactDedup(Tables.load(s, dir, "documents"),
             substring(col("text"), 1, 50), "doc_id")
           .select(col("doc_id"), col("n_dups"))
           .orderBy(col("doc_id"))
@@ -3061,11 +3047,11 @@ object Queries {
     // The engine-neutral md5-derived token hash (DedupOps.md5TokenHash)
     // makes the fingerprints — and hence the banded pair join —
     // value-exact against a pure-SQL oracle that recomputes SimHash
-    // from scratch. The xxhash64 fast path is spec-verified equivalent
-    // in structure (DedupOpsSpec).
+    // from scratch. The default xxhash64 token hash runs the same
+    // aggregation (DedupOpsSpec pins it against an explode reference).
     ("x2_simhash_pairs",
       (s: SparkSession, dir: String) => {
-        val fps = DedupOps.simHashFast(Tables.load(s, dir, "documents"), "doc_id", "text",
+        val fps = DedupOps.simHash(Tables.load(s, dir, "documents"), "doc_id", "text",
           DedupOps.md5TokenHash)
         DedupOps.simHashPairs(fps, maxHamming = 3)
           .withColumn("hamming", col("hamming").cast("long"))
@@ -3905,9 +3891,9 @@ object Queries {
     // ---- X4: char-trigram language ID (n-gram profile argmax) ----
     ("x4_trigram_langid",
       (s: SparkSession, dir: String) => {
-        // fast path: one-pass codegen expression; TextOpsSpec pins its
-        // equality with the explode-formulated trigramLangId
-        TextOps.trigramLangIdFast(Tables.load(s, dir, "documents"), "doc_id", "text",
+        // one-pass codegen expression; TextOpsSpec pins its equality
+        // with an explode-formulated reference
+        TextOps.trigramLangId(Tables.load(s, dir, "documents"), "doc_id", "text",
             profiles = Seq(
               "en" -> Seq("the", "ing", "and", "ion", "ent"),
               "de" -> Seq("der", "sch", "ein", "ich", "und")))

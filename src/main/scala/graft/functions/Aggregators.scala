@@ -11,10 +11,11 @@ object Aggregators {
 
   /** SimHash fingerprint as ONE aggregation: the buffer is the 64
     * per-bit counters, updated from each token hash directly. The
-    * HOF/explode formulation ([[graft.llm.DedupOps.simHash]]) emits
-    * 64 rows per token before aggregating — this emits none, and its
-    * partials merge associatively, so map-side combine does most of
-    * the work before the shuffle. Semantics identical (tested).
+    * explode formulation (the test-side reference that
+    * [[graft.llm.DedupOps.simHash]] is pinned against) emits 64 rows
+    * per token before aggregating — this emits none, and its partials
+    * merge associatively, so map-side combine does most of the work
+    * before the shuffle. Semantics identical (tested).
     *
     * IN: xxhash64 of a token; BUF: 64 counters; OUT: the fingerprint.
     */

@@ -193,14 +193,15 @@ case class LongDot(left: Expression, right: Expression) extends BinaryExpression
 }
 
 /** Count character-trigram hits against P language profiles in ONE
-  * pass over the text: returns `ARRAY<BIGINT>` of length P. The
-  * DataFrame formulation ([[graft.llm.TextOps.trigramLangId]])
-  * explodes one row per sliding window (25M+ rows at sf0.1) through a
-  * Generate and a two-level hash aggregate; this expression slides the
-  * window inside generated code, probes P hash sets per position, and
-  * emits nothing but the final counts — no explode, no shuffle.
-  * Semantics identical to the explode path (spec-pinned): text is
-  * lowercased first, windows shorter than 3 chars match nothing.
+  * pass over the text: returns `ARRAY<BIGINT>` of length P. An
+  * explode formulation (the test-side reference that
+  * [[graft.llm.TextOps.trigramLangId]] is pinned against) ships one
+  * row per sliding window (25M+ rows at sf0.1) through a Generate and
+  * a two-level hash aggregate; this expression slides the window
+  * inside generated code, probes P hash sets per position, and emits
+  * nothing but the final counts — no explode, no shuffle. Semantics
+  * identical to the explode path (spec-pinned): text is lowercased
+  * first, windows shorter than 3 chars match nothing.
   */
 case class TrigramProfileCount(child: Expression, profiles: Seq[Seq[String]])
     extends UnaryExpression {

@@ -10,38 +10,25 @@ import graft.sources.Materializer.freeze
 /** Deduplication operators for document corpora
   * (SURVEY.md §2.8 X1/X2).
   *
-  * Scale posture: exact dedup is one hash shuffle on the key; the
-  * near-dup family avoids the O(N²) pair space via inverted-index
-  * (shingle) joins, MinHash+LSH banding, or SimHash chunk banding —
-  * the only sub-quadratic options at 100 TB.
+  * Scale posture: exact dedup is a map-side-combined aggregate on the
+  * key plus a join back on the unique winning id; the near-dup family
+  * avoids the O(N²) pair space via inverted-index (shingle) joins,
+  * MinHash+LSH banding, or SimHash chunk banding — the only
+  * sub-quadratic options at 100 TB.
   */
 object DedupOps {
 
   /** X1: exact dedup — keep the lowest-id row per key; adds `n_dups`
-    * (group size). One shuffle on the key.
-    */
-  def exactDedup(df: DataFrame, keyCol: Column, idCol: String): DataFrame = {
-    val w = Window.partitionBy(keyCol).orderBy(col(idCol))
-    val wAll = Window.partitionBy(keyCol)
-    df.withColumn("__rn", row_number().over(w))
-      .withColumn("n_dups", count(lit(1)).over(wAll))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** X1 scalable twin of [[exactDedup]] for SKEWED keys. The window
-    * formulation puts every row of a key in one task — fine on
-    * high-cardinality keys, degenerate when one key dominates (a
-    * boilerplate page duplicated a billion times). This variant is
-    * window-free: a two-phase hash aggregation finds each key's
+    * (group size), null keys grouped together. Window-free, so a
+    * SKEWED key (a boilerplate page duplicated a billion times) never
+    * lands in one task: a two-phase hash aggregation finds each key's
     * winning id and group size (partial min/count collapses a mapper's
     * rows per key to ONE before the shuffle, so a dominant key costs
     * one row per task, not one task), then a join back on
     * (key, winning id) — and since the join key includes the unique
-    * id, the join itself cannot skew. Same output contract as
-    * [[exactDedup]], null keys included (null-safe key equality).
+    * id, the join itself cannot skew. Key equality is null-safe.
     */
-  def exactDedupScalable(df: DataFrame, keyCol: Column, idCol: String): DataFrame = {
+  def exactDedup(df: DataFrame, keyCol: Column, idCol: String): DataFrame = {
     val agg = df.select(keyCol.as("__k"), col(idCol).as("__id"))
       .groupBy(col("__k"))
       .agg(min(col("__id")).as("__minid"), count(lit(1)).as("n_dups"))
@@ -985,28 +972,12 @@ object DedupOps {
 
   /** 64-bit SimHash fingerprint per document over token hashes:
     * bit j of the fingerprint is the sign of Σ_tokens (±1 by token's
-    * bit j). Rows explode 64× per token here; the production-scale
-    * variant is a TypedImperativeAggregate holding the 64 counters in
-    * its buffer (same semantics, one pass, map-side combinable).
+    * bit j). ONE typed aggregation over token hashes — no 64× row
+    * explosion; the 64 counters live in the aggregation buffer and
+    * partials merge map-side ([[graft.functions.Aggregators.SimHashAgg]]).
     */
   def simHash(docs: DataFrame, idCol: String, textCol: String,
-              tokenHash: Column => Column = xxTokenHash): DataFrame =
-    docs
-      .select(col(idCol).as("doc_id"), explode(split(col(textCol), " ")).as("tok"))
-      .withColumn("h", tokenHash(col("tok")))
-      .select(col("doc_id"), col("h"), explode(expr("sequence(0, 63)")).as("j"))
-      .withColumn("v", when(expr("(h >> j) & 1") === 1, lit(1)).otherwise(lit(-1)))
-      .groupBy("doc_id", "j").agg(sum(col("v")).as("s"))
-      .groupBy("doc_id")
-      .agg(sum(when(col("s") >= 0, expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L))).as("fp"))
-
-  /** Scale-path SimHash: same fingerprints as [[simHash]] from ONE
-    * typed aggregation over token hashes — no 64× row explosion; the
-    * 64 counters live in the aggregation buffer and partials merge
-    * map-side ([[graft.functions.Aggregators.SimHashAgg]]).
-    */
-  def simHashFast(docs: DataFrame, idCol: String, textCol: String,
-                  tokenHash: Column => Column = xxTokenHash): DataFrame = {
+              tokenHash: Column => Column = xxTokenHash): DataFrame = {
     val simhashUdaf = udaf(graft.functions.Aggregators.SimHashAgg,
       org.apache.spark.sql.Encoders.scalaLong)
     docs

@@ -49,22 +49,9 @@ object ImageCodec {
   /** Encode through the REAL JDK PNG writer (lossless). */
   def writePng(img: BufferedImage): Array[Byte] = write(img, "png")
 
-  /** Decode to (width, height, channels, meanLuma) — None if the JDK
-    * has no reader for the bytes.
+  /** Decode through a REAL JDK image reader — None if the JDK has no
+    * reader for the bytes.
     */
-  def decode(bytes: Array[Byte]): Option[(Int, Int, Int, Double)] =
-    read(bytes).map { img =>
-      val (w, h) = (img.getWidth, img.getHeight)
-      var sum = 0.0
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { sum += luma(img.getRGB(x, y)); x += 1 }
-        y += 1
-      }
-      (w, h, img.getColorModel.getNumComponents, sum / (w.toLong * h))
-    }
-
   def read(bytes: Array[Byte]): Option[BufferedImage] = {
     // Passing an ImageInputStream (not a raw InputStream) keeps the
     // read on the per-call memory cache regardless of the JVM-global

@@ -112,37 +112,14 @@ object MultimodalOps {
       col(idCol).as("doc_id"),
       graft.functions.FingerprintFunctions.byteClassFingerprint(col(blobCol)).as("fp"))
 
-  /** FULL pixel-decode tier — REAL codecs via the JDK's own
-    * `javax.imageio` ([[ImageCodec]]): image blobs decode to actual
-    * dimensions, channel count, and mean luma; non-image blobs fall
-    * back to the deterministic [[FakeDecoder]]. Same `mapPartitions`
-    * batching as [[decodeBlobs]] — this IS the "swap the stub for a
-    * codec call" the plumbing was designed for, with no plan change.
-    */
-  def decodeImages(df: DataFrame, idCol: String, blobCol: String): Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(blobCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val b = Option(bytes).getOrElse(Array.empty[Byte])
-          ImageCodec.decode(b) match {
-            case Some((w, h, c, mean)) => MediaMeta(id, b.length.toLong, w, h, c, mean)
-            case None => FakeDecoder.decode(id, b)
-          }
-        }
-      }
-  }
-
-  /** EXACT-integer decode tier: dimensions, channel count, and the
-    * integer rec-601 luma sum `Σ (299·r + 587·g + 114·b) / 1000`
-    * (floor) over REAL decoded pixels — every output column is exact
-    * integer arithmetic, so a SQL oracle replays it bit-for-bit (the
-    * float-mean form in [[decodeImages]] rides summation-order ulps;
-    * an oracle gate on it needs rounding that can still straddle a
-    * boundary). Non-image blobs produce no rows (absent-row contract,
-    * like [[imageFeatures]]).
+  /** Pixel-decode tier — REAL codecs via the JDK's own `javax.imageio`
+    * ([[ImageCodec]]): dimensions, channel count, and the integer
+    * rec-601 luma sum `Σ (299·r + 587·g + 114·b) / 1000` (floor) over
+    * the decoded pixels. Every output column is exact integer
+    * arithmetic, so a SQL oracle replays it bit-for-bit (a float mean
+    * rides summation-order ulps; an oracle gate on it needs rounding
+    * that can still straddle a boundary). Non-image blobs produce no
+    * rows (absent-row contract, like [[imageFeatures]]).
     */
   def decodeImagesExact(df: DataFrame, idCol: String, blobCol: String): DataFrame = {
     val spark = df.sparkSession

@@ -186,51 +186,16 @@ object TextOps {
 
   /** Character-trigram language ID — the classic n-gram-profile
     * heuristic: slide a 3-char window over the lowercased text, count
-    * hits against per-language trigram profiles, argmax wins. Pure
-    * higher-order functions (transform/filter), no explode, no
-    * shuffle; profiles are literal arrays folded into codegen.
+    * hits against per-language trigram profiles, argmax wins (ties go
+    * to the first profile). ONE pass per document — the
+    * [[graft.functions.TrigramProfileCount]] codegen expression slides
+    * the window and probes every profile inside generated code, so
+    * there is no explode, no Generate, and no shuffle at all (an
+    * explode formulation ships 1 row per sliding window into a
+    * two-level hash aggregate).
     */
   def trigramLangId(docs: DataFrame, idCol: String, textCol: String,
                     profiles: Seq[(String, Seq[String])]): DataFrame = {
-    // lower bound 1 (not 0): sequence(1, 0) would count DOWN. A sub-3-char
-    // text yields one short window that matches no 3-char profile entry.
-    //
-    // Explode + conditional aggregation rather than per-profile
-    // filter() columns: project collapse would inline the trigram
-    // transform into every referencing column and re-slide the window
-    // P+1 times per row; the Generate evaluates it exactly once.
-    val tg = s"transform(sequence(1, greatest(length($textCol) - 2, 1)), i -> substring(lower($textCol), i, 3))"
-    val exploded = docs.select(col(idCol), explode_outer(expr(tg)).as("__t"))
-    val aggs = profiles.map { case (lang, grams) =>
-      sum(when(col("__t").isin(grams: _*), 1L).otherwise(0L)).as(s"n_$lang")
-    }
-    val counts = exploded.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    counts.withColumn("predicted", argmaxLang(profiles))
-  }
-
-  /** argmax over the `n_<lang>` columns with first-profile tie-break,
-    * written as a fold of whens (shared by both language-ID paths).
-    */
-  private def argmaxLang(profiles: Seq[(String, Seq[String])]): Column = {
-    val (firstLang, firstCount) = (profiles.head._1, col(s"n_${profiles.head._1}"))
-    profiles.tail.foldLeft((lit(firstLang), firstCount)) {
-      case ((plabel, pcount), (lang, _)) =>
-        val c = col(s"n_$lang")
-        (when(c > pcount, lit(lang)).otherwise(plabel),
-          when(c > pcount, c).otherwise(pcount))
-    }._1
-  }
-
-  /** Scale-path trigram language ID: same output as [[trigramLangId]]
-    * (spec-pinned) from ONE pass per document — the
-    * [[graft.functions.TrigramProfileCount]] codegen expression slides
-    * the window and probes every profile inside generated code, so
-    * there is no explode, no Generate, and no shuffle at all (the
-    * explode path ships 1 row per sliding window into a two-level hash
-    * aggregate).
-    */
-  def trigramLangIdFast(docs: DataFrame, idCol: String, textCol: String,
-                        profiles: Seq[(String, Seq[String])]): DataFrame = {
     val counts = graft.functions.VectorFunctions.trigramProfileCount(
       col(textCol), profiles.map(_._2))
     val withCounts = docs
@@ -238,7 +203,16 @@ object TextOps {
       .select(col(idCol) +: profiles.zipWithIndex.map { case ((lang, _), i) =>
         element_at(col("__c"), i + 1).as(s"n_$lang")
       }: _*)
-    withCounts.withColumn("predicted", argmaxLang(profiles))
+    // argmax over the n_<lang> columns as a fold of whens: a later
+    // profile wins only on a strictly greater count
+    val (firstLang, firstCount) = (profiles.head._1, col(s"n_${profiles.head._1}"))
+    val predicted = profiles.tail.foldLeft((lit(firstLang), firstCount)) {
+      case ((plabel, pcount), (lang, _)) =>
+        val c = col(s"n_$lang")
+        (when(c > pcount, lit(lang)).otherwise(plabel),
+          when(c > pcount, c).otherwise(pcount))
+    }._1
+    withCounts.withColumn("predicted", predicted)
   }
 
   /** Quality scoring: length-based and stopword-ratio heuristics that
@@ -728,7 +702,7 @@ object TextOps {
 
   /** X4: BPE-apply — encode each document with a trained subword
     * vocabulary via greedy longest match
-    * ([[graft.functions.GreedyMatchTokens]]): the broadcast-vocab
+    * ([[graft.functions.GreedyMatchEncode]]): the broadcast-vocab
     * tokenization step of a training-data pipeline. Text is
     * lowercased, split on spaces; characters outside the vocabulary
     * become single-character unknown tokens (counted in `n_unk`).

@@ -193,9 +193,6 @@ object VideoCodec {
   private def rdU64(b: Array[Byte], o: Int): Long =
     (rdU32(b, o) << 32) | rdU32(b, o + 4)
 
-  private def rdU16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-
   private def rdType(b: Array[Byte], o: Int): String =
     new String(b, o, 4, "ISO-8859-1")
 

@@ -185,10 +185,6 @@ object MatV5 {
     } finally raf.close()
   }
 
-  /** Read one matrix payload as doubles in column-major order. */
-  def readData(path: String, m: NumericMeta): Array[Double] =
-    readRows(path, m, 0, m.rows)
-
   /** Read rows `[rowStart, rowStart + nRows)` of a column-major
     * payload as doubles, still column-major within the slice
     * (`out(c * nRows + (r - rowStart))`). A row range of a

@@ -360,8 +360,9 @@ object StreamOps {
     * the horizon accordingly.
     *
     * Batch twin: [[graft.llm.DedupOps.exactDedup]] keyed the same way
-    * (the `x6_dedup_events` driver query pins it against the DuckDB
-    * oracle).
+    * (StreamOpsSpec checks both keep the same survivors; the
+    * `x6_dedup_events` driver query pins the batch twin against the
+    * DuckDB oracle).
     */
   def dedupStream(events: DataFrame, keyCols: Seq[String], watermark: String): DataFrame =
     events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keyCols)

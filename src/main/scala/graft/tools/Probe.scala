@@ -50,7 +50,7 @@ object Probe {
       }
 
       // 2) simhash hamming<=3 pairs vs identical-text pairs
-      val fps = DedupOps.simHashFast(docs, "doc_id", "text")
+      val fps = DedupOps.simHash(docs, "doc_id", "text")
       val sh = DedupOps.simHashPairs(fps, maxHamming = 3)
       val identical = docs.as("a").join(docs.as("b"),
           col("a.text") === col("b.text") && col("a.doc_id") < col("b.doc_id"))

@@ -23,20 +23,16 @@ class DedupOpsSpec extends SparkSpec {
     got shouldBe Map(1L -> 2L, 3L -> 1L, 4L -> 1L, 5L -> 1L)
   }
 
-  test("X1 exactDedupScalable equals the window form on skewed and null keys") {
-    // one dominant key (80%), one singleton, and null keys — the
-    // window form puts the dominant key in one task; outputs must
-    // still be identical
+  test("X1 exactDedup on skewed and null keys: one winner and group size per key") {
+    // one dominant key (80%), one singleton, and null keys — null keys
+    // group together (null-safe join back)
     val skewed = ((1L to 40L).map(i => (i, "dominant")) ++
       Seq((100L, "rare"), (200L, null), (201L, null)))
       .toDF("doc_id", "text")
-    def shape(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "n_dups").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val win = shape(DedupOps.exactDedup(skewed, col("text"), "doc_id"))
-    val agg = shape(DedupOps.exactDedupScalable(skewed, col("text"), "doc_id"))
-    agg shouldBe win
-    agg shouldBe Map(1L -> 40L, 100L -> 1L, 200L -> 2L)
+    DedupOps.exactDedup(skewed, col("text"), "doc_id")
+      .select("doc_id", "n_dups").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe
+      Map(1L -> 40L, 100L -> 1L, 200L -> 2L)
   }
 
   test("wordShingles yields distinct w-grams, none for short docs") {
@@ -129,12 +125,15 @@ class DedupOpsSpec extends SparkSpec {
     }
   }
 
-  test("X2 simHashFast (typed aggregator) produces identical fingerprints to simHash") {
-    val slow = DedupOps.simHash(docs, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val fast = DedupOps.simHashFast(docs, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    fast shouldBe slow
+  test("X2 simHash (typed aggregator) equals the explode reference fingerprints") {
+    val real = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    for (d <- Seq(docs, real)) {
+      val ref = ExplodeRefs.simHash(d, "doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = DedupOps.simHash(d, "doc_id", "text").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      got shouldBe ref
+    }
   }
 
   test("X2 clusterNearDups: transitive closure gets one min-id label per component") {

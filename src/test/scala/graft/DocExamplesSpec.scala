@@ -68,7 +68,7 @@ class DocExamplesSpec extends SparkSpec {
 
   test("text analysis example (OPERATORS.md X4)") {
     TextOps.tokenStats(docs, "doc_id", "text").count() shouldBe 3
-    TextOps.trigramLangIdFast(docs, "doc_id", "text", profiles = Seq(
+    TextOps.trigramLangId(docs, "doc_id", "text", profiles = Seq(
       "en" -> Seq("the", "ing", "and"), "de" -> Seq("der", "sch", "ein")))
       .count() shouldBe 3
     TextOps.bpeTrain(docs, "doc_id", "text", nMerges = 5, maxWords = 1 << 20).count() shouldBe 5

@@ -40,17 +40,15 @@ class ImageCodecSpec extends SparkSpec {
 
   private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  test("decode reads real pixels: dimensions, channels, plausible mean luma") {
-    val Some((w, h, c, mean)) = ImageCodec.decode(bytes(gradient(40, 30, 0)))
-    (w, h, c) shouldBe ((40, 30, 3))
-    mean should (be > 10.0 and be < 245.0)
-    ImageCodec.decode("not an image".getBytes("UTF-8")) shouldBe None
+  test("read decodes real pixels: dimensions and channels, None for non-images") {
+    val img = ImageCodec.read(bytes(gradient(40, 30, 0))).get
+    (img.getWidth, img.getHeight, img.getColorModel.getNumComponents) shouldBe ((40, 30, 3))
+    ImageCodec.read("not an image".getBytes("UTF-8")) shouldBe None
   }
 
   test("resizePng really resizes: output decodes to the target geometry") {
-    val resized = ImageCodec.resizePng(bytes(gradient(64, 48, 0)), 16, 12).get
-    val Some((w, h, _, _)) = ImageCodec.decode(resized)
-    (w, h) shouldBe ((16, 12))
+    val resized = ImageCodec.read(ImageCodec.resizePng(bytes(gradient(64, 48, 0)), 16, 12).get).get
+    (resized.getWidth, resized.getHeight) shouldBe ((16, 12))
   }
 
   test("pHash: stable under re-encode and small noise, far for unrelated images") {
@@ -76,14 +74,23 @@ class ImageCodecSpec extends SparkSpec {
   }
 
   test("real ops fall back to stubs on non-image blobs, partition-parallel") {
-    val png = bytes(gradient(20, 10, 0))
+    val grad = gradient(20, 10, 0)
+    val png = bytes(grad)
     val txt = "text blob".getBytes("UTF-8")
     val df = Seq((1L, png), (2L, txt)).toDF("doc_id", "blob").repartition(2)
 
-    val metas = MultimodalOps.decodeImages(df, "doc_id", "blob")
-      .collect().map(m => m.doc_id -> m).toMap
-    (metas(1L).width, metas(1L).height, metas(1L).channels) shouldBe ((20, 10, 3))
-    metas(2L) shouldBe MultimodalOps.FakeDecoder.decode(2L, txt)
+    // exact decode: the PNG row carries its geometry and the floor
+    // rec-601 luma sum of the source pixels; the text row is absent
+    val metas = MultimodalOps.decodeImagesExact(df, "doc_id", "blob")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    metas.keySet shouldBe Set(1L)
+    val m = metas(1L)
+    (m.getInt(1), m.getInt(2), m.getInt(3)) shouldBe ((20, 10, 3))
+    val lumaSum = (for (x <- 0 until 20; y <- 0 until 10) yield {
+      val rgb = grad.getRGB(x, y)
+      (299L * ((rgb >> 16) & 0xff) + 587L * ((rgb >> 8) & 0xff) + 114L * (rgb & 0xff)) / 1000
+    }).sum
+    m.getLong(4) shouldBe lumaSum
 
     val fps = MultimodalOps.pHashImages(df, "doc_id", "blob")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -92,8 +99,8 @@ class ImageCodecSpec extends SparkSpec {
 
     val rs = MultimodalOps.resizeImages(df, "doc_id", "blob", 8, 8)
       .collect().map(r => r.doc_id -> r).toMap
-    val Some((rw, rh, _, _)) = ImageCodec.decode(rs(1L).blob)
-    (rw, rh) shouldBe ((8, 8))
+    val small = ImageCodec.read(rs(1L).blob).get
+    (small.getWidth, small.getHeight) shouldBe ((8, 8))
     rs(2L).blob.length shouldBe 64 // stub subsample path
   }
 

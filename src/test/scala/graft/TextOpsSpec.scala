@@ -70,7 +70,7 @@ class TextOpsSpec extends SparkSpec {
     all(frames.map(_.frame.length)) shouldBe 16
   }
 
-  test("X4 trigramLangIdFast (codegen expression) equals the explode implementation") {
+  test("X4 trigramLangId (codegen expression) equals the explode reference") {
     val profiles = Seq(
       "en" -> Seq("the", "ing", "and", "ion", "ent"),
       "de" -> Seq("der", "sch", "ein", "ich", "und"))
@@ -81,10 +81,10 @@ class TextOpsSpec extends SparkSpec {
       (4L, "der schein und der schein ich")).toDF("doc_id", "text")
     val real = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     for (d <- Seq(crafted, real)) {
-      val slow = TextOps.trigramLangId(d, "doc_id", "text", profiles)
-      val fast = TextOps.trigramLangIdFast(d, "doc_id", "text", profiles)
-      fast.exceptAll(slow).count() shouldBe 0L
-      slow.exceptAll(fast).count() shouldBe 0L
+      val ref = ExplodeRefs.trigramLangId(d, "doc_id", "text", profiles)
+      val got = TextOps.trigramLangId(d, "doc_id", "text", profiles)
+      got.exceptAll(ref).count() shouldBe 0L
+      ref.exceptAll(got).count() shouldBe 0L
     }
   }
 
